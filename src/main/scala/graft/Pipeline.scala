@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import scala.util.{Failure, Try}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, struct, to_json}
 import graft.model.Model
 import graft.operators._
 import graft.sinks.{BatchedHttpSink, Sinks}
@@ -81,67 +84,106 @@ object Pipeline {
       Outputs(eventsOut, profiles, None)
   }
 
-  /** Full E-T-L run. Event counts are taken with `observe()` DURING the
-    * sink write — the reference's extracted = transformed = imported
-    * reconciliation (SURVEY §5) without a second scan of the data.
+  /** Full E-T-L run.
+    *
+    * Shuffles are planned with one partition per core
+    * (`defaultParallelism`) unless the session sets
+    * `spark.sql.shuffle.partitions` itself; the session's own setting is
+    * back when the run returns, and AQE still coalesces. Spark's default of
+    * 200 makes every map task of a small load open 200 shuffle files.
+    *
+    * Every output is shaped first, so an analysis error fails the run
+    * before anything is loaded. The events, profiles and merge writes are
+    * then submitted together and reconciled once all of them have finished.
+    * This departs from the reference's events → profiles → merges order on
+    * purpose, and is safe because no load depends on another having
+    * landed: every endpoint is idempotent on its own key (`$insert_id`,
+    * `$distinct_id`), profile `$set` carries `$ignore_time`, and Mixpanel
+    * `$merge` is retroactive.
+    *
+    * Event counts are taken with `observe()` DURING the sink write — the
+    * reference's extracted = transformed = imported reconciliation
+    * (SURVEY §5) without a second scan of the data.
     */
   def run(spark: SparkSession, config: Config): Report = {
     Tables.tune(spark)
-    val out = transform(spark, config.source)
-    val obs = new org.apache.spark.sql.Observation()
-    val observedEvents = out.events.observe(obs,
-      org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n_events"))
-    try config.destination match {
-      case LocalJson(dir) =>
-        // profiles/merges counts ride the write job via observe() too —
-        // each output DAG executes exactly once (no count() re-run)
-        val pObs = new org.apache.spark.sql.Observation()
-        val mObs = new org.apache.spark.sql.Observation()
-        Sinks.writeLocalJson(observedEvents, s"$dir/events")
-        out.profiles.foreach(p => Sinks.writeLocalJson(
-          p.observe(pObs, org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("n")), s"$dir/profiles"))
-        out.mergePairs.foreach(m => Sinks.writeLocalJson(
-          m.observe(mObs, org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("n")), s"$dir/mergeTables"))
-        Report(obs.get("n_events").asInstanceOf[Long],
-          out.profiles.map(_ => pObs.get("n").asInstanceOf[Long]).getOrElse(0L),
-          out.mergePairs.map(_ => mObs.get("n").asInstanceOf[Long]).getOrElse(0L), None)
-      case HttpSink(vendor, opts, transport) =>
-        val cfg = Sinks.forVendor(vendor, opts)
-        // K8 vendor routing: reverse sinks reshape to their own wire format
-        // (reference load/sendOther.js:7-18)
-        val shaped = vendor.toLowerCase match {
-          case "amplitude" =>
-            MixpanelTransform.eventsToAmplitude(observedEvents)
-              .select(org.apache.spark.sql.functions.to_json(
-                org.apache.spark.sql.functions.struct(
-                  org.apache.spark.sql.functions.col("*"))).as("json"))
-          case "woopra" =>
-            MixpanelTransform.eventsToWoopra(observedEvents)
-              .select(org.apache.spark.sql.functions.to_json(
-                org.apache.spark.sql.functions.struct(
-                  org.apache.spark.sql.functions.col("*"))).as("json"))
-          case _ => Sinks.shapeMixpanelEvents(observedEvents)
-        }
-        val report = Sinks.write(shaped, cfg, transport)
-        // reconciliation invariant: with no failed batches, every
-        // transformed event must have been acknowledged by the sink
-        val transformed = obs.get("n_events").asInstanceOf[Long]
-        if (report.failedBatches == 0)
-          require(transformed == report.records,
-            s"count reconciliation broken: transformed=$transformed loaded=${report.records}")
-        val profileReport = out.profiles.map { p =>
-          Sinks.write(Sinks.shapeMixpanelProfiles(p, opts.getOrElse("token", "")),
-            Sinks.mixpanelEngageConfig(opts.getOrElse("token", "")), transport)
-        }
-        val mergeReport = out.mergePairs.map { m =>
-          Sinks.write(Sinks.shapeMixpanelMerges(m), cfg, transport)
-        }
-        Report(report.records,
-          profileReport.map(_.records).getOrElse(0L),
-          mergeReport.map(_.records).getOrElse(0L), Some(report))
-    } finally out.release() // drop any shared-scan cache (J2) once written
+    withCoreShuffles(spark) {
+      val out = transform(spark, config.source)
+      try load(out, config.destination)
+      finally out.release() // drop any shared-scan cache (J2) once written
+    }
+  }
+
+  private def withCoreShuffles[A](spark: SparkSession)(body: => A): A = {
+    val key = "spark.sql.shuffle.partitions"
+    if (spark.conf.getAll.contains(key)) body
+    else {
+      spark.conf.set(key, spark.sparkContext.defaultParallelism.toLong)
+      try body finally spark.conf.unset(key)
+    }
+  }
+
+  private def load(out: Outputs, destination: Destination): Report = destination match {
+    case LocalJson(dir) =>
+      // every count rides its write job via observe() — each output DAG
+      // executes exactly once (no count() re-run)
+      def counted(df: DataFrame, name: String): () => Long = {
+        val obs = new Observation()
+        val observed = df.observe(obs, count(lit(1)).as("n"))
+        () => { Sinks.writeLocalJson(observed, s"$dir/$name"); obs.get("n").asInstanceOf[Long] }
+      }
+      val Seq(events, profiles, merges) = together(Seq(
+        Some(counted(out.events, "events")),
+        out.profiles.map(counted(_, "profiles")),
+        out.mergePairs.map(counted(_, "mergeTables"))))
+      Report(events.get, profiles.getOrElse(0L), merges.getOrElse(0L), None)
+    case HttpSink(vendor, opts, transport) =>
+      val cfg = Sinks.forVendor(vendor, opts)
+      val token = opts.getOrElse("token", "")
+      val obs = new Observation()
+      val observedEvents = out.events.observe(obs, count(lit(1)).as("n_events"))
+      // K8 vendor routing: reverse sinks reshape to their own wire format
+      // (reference load/sendOther.js:7-18)
+      val events = vendor.toLowerCase match {
+        case "amplitude" =>
+          MixpanelTransform.eventsToAmplitude(observedEvents)
+            .select(to_json(struct(col("*"))).as("json"))
+        case "woopra" =>
+          MixpanelTransform.eventsToWoopra(observedEvents)
+            .select(to_json(struct(col("*"))).as("json"))
+        case _ => Sinks.shapeMixpanelEvents(observedEvents)
+      }
+      def write(df: DataFrame, c: BatchedHttpSink.SinkConfig) =
+        () => Sinks.write(df, c, transport)
+      val Seq(Some(report), profiles, merges) = together(Seq(
+        Some(write(events, cfg)),
+        out.profiles.map(p => write(Sinks.shapeMixpanelProfiles(p, token),
+          Sinks.mixpanelEngageConfig(token))),
+        out.mergePairs.map(m => write(Sinks.shapeMixpanelMerges(m), cfg))))
+      // reconciliation invariant: with no failed batches, every
+      // transformed event must have been acknowledged by the sink
+      val transformed = obs.get("n_events").asInstanceOf[Long]
+      if (report.failedBatches == 0)
+        require(transformed == report.records,
+          s"count reconciliation broken: transformed=$transformed loaded=${report.records}")
+      Report(report.records, profiles.map(_.records).getOrElse(0L),
+        merges.map(_.records).getOrElse(0L), Some(report))
+  }
+
+  /** Runs the given writes together on a driver pool and waits for every
+    * one. The first failure, in argument order, is rethrown only after all
+    * have finished, so none still reads a cache the caller then releases.
+    * The pool's threads start here and so inherit the caller's Spark local
+    * properties (job group, scheduler pool).
+    */
+  private def together[A](writes: Seq[Option[() => A]]): Seq[Option[A]] = {
+    val pool = Executors.newFixedThreadPool(writes.count(_.isDefined))
+    try {
+      val pending = writes.map(_.map(w => pool.submit(new Callable[A] { def call(): A = w() })))
+      val done = pending.map(_.map(f =>
+        Try(f.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) }))
+      done.flatten.collectFirst { case Failure(e) => throw e }
+      done.map(_.map(_.get))
+    } finally pool.shutdown()
   }
 }

@@ -43,13 +43,15 @@ object Sinks {
         "/engage?verbose=1",
       maxRecordsPerBatch = 2000)
 
-  def shapeMixpanelProfiles(profiles: DataFrame, token: String): DataFrame =
+  /** `$ip` is sent only when the profiles carry an `ip` column: Amplitude
+    * profiles do, GA and CSV profiles have none.
+    */
+  def shapeMixpanelProfiles(profiles: DataFrame, token: String): DataFrame = {
+    val ip = if (profiles.columns.contains("ip")) Seq(col("ip").as("$ip")) else Nil
     profiles.select(to_json(struct(
-      lit(token).as("$token"),
-      col("distinct_id").as("$distinct_id"),
-      col("ip").as("$ip"),
-      lit(true).as("$ignore_time"),
-      col("set").as("$set"))).as("json"))
+      Seq(lit(token).as("$token"), col("distinct_id").as("$distinct_id")) ++ ip ++
+        Seq(lit(true).as("$ignore_time"), col("set").as("$set")): _*)).as("json"))
+  }
 
   /** Mixpanel /import $merge events (identity edges). */
   def shapeMixpanelMerges(pairs: DataFrame): DataFrame =

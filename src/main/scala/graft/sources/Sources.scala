@@ -93,7 +93,8 @@ object Sources {
       val parsed = spark.read.options(hadoopOpts).textFile(path).toDF("line")
         .withColumn("j", from_json(col("line"), withCorrupt,
           Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record")))
-      val good = parsed.filter(col("j._corrupt_record").isNull)
+      // a blank line parses to a null struct: neither a record nor corrupt
+      val good = parsed.filter(col("j").isNotNull && col("j._corrupt_record").isNull)
         .select(col("j.*")).drop("_corrupt_record")
       val corrupt = parsed.filter(col("j._corrupt_record").isNotNull)
         .select(col("line").as("_corrupt_record"))
@@ -127,7 +128,7 @@ object Sources {
         Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record")))
     val badFiles = parsed.filter(col("j._corrupt_record").isNotNull)
       .groupBy("fname").agg(count(lit(1)).as("n_corrupt"))
-    val good = parsed
+    val good = parsed.filter(col("j").isNotNull) // blank lines parse to null
       .join(badFiles.select("fname"), Seq("fname"), "left_anti")
       .select(col("j.*")).drop("_corrupt_record")
     FileGatedRead(good, badFiles)

@@ -1,10 +1,34 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
+import graft.model.Model
 import graft.operators._
 import graft.sinks.BatchedHttpSink
 import graft.sinks.BatchedHttpSink.{HttpResponseLite, SinkConfig, Transport}
+import graft.sources.Sources
+
+/** Records every POST with its URL; static so executor threads (same JVM
+  * in local mode) share it.
+  */
+object UrlRecordingTransport {
+  val posts = new ConcurrentLinkedQueue[(String, Array[Byte])]()
+}
+
+class UrlRecordingTransport extends Transport {
+  def post(url: String, body: Array[Byte], headers: Map[String, String]): HttpResponseLite = {
+    UrlRecordingTransport.posts.add(url -> body)
+    HttpResponseLite(200, "{}")
+  }
+}
 
 /** End-to-end vendor ETL tests over FIXTURES.md-shaped synthetic inputs. */
 class EtlPipelineSpec extends SparkSpec {
@@ -15,6 +39,26 @@ class EtlPipelineSpec extends SparkSpec {
 
   def writeLines(dir: String, name: String, lines: Seq[String]): Unit =
     Files.write(java.nio.file.Paths.get(dir, name), lines.mkString("\n").getBytes("UTF-8"))
+
+  val mixpanelSink: Pipeline.HttpSink = Pipeline.HttpSink("mixpanel",
+    Map("project_id" -> "1", "auth" -> "x", "token" -> "t"), new UrlRecordingTransport)
+
+  /** Runs `source` into [[mixpanelSink]] and returns the report with the
+    * records it posted, split into events, profiles and `$merge`s.
+    */
+  def runIntoMixpanel(source: Pipeline.Source)
+      : (Pipeline.Report, Seq[JsonNode], Seq[JsonNode], Seq[JsonNode]) = {
+    UrlRecordingTransport.posts.clear()
+    val report = Pipeline.run(spark, Pipeline.Config(source, mixpanelSink))
+    val mapper = new ObjectMapper()
+    val records = UrlRecordingTransport.posts.asScala.toSeq.flatMap { case (url, b) =>
+      val in = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(b))
+      mapper.readTree(in.readAllBytes()).elements().asScala.map(url -> _)
+    }
+    val (engage, imports) = records.partition(_._1.contains("/engage"))
+    val (merges, events) = imports.map(_._2).partition(_.path("event").asText == "$merge")
+    (report, events, engage.map(_._2), merges)
+  }
 
   val ampLines: Seq[String] = Seq(
     // full event: user+device → merge pair; user_properties → profile
@@ -214,5 +258,91 @@ class EtlPipelineSpec extends SparkSpec {
       col("properties"))).select("event").as[String].head() == "b")
     assert(df.filter(parse("""properties["$source"] == "y" or properties["n"] >= 15""",
       col("properties"))).count() == 2)
+  }
+
+  test("amplitude into the mixpanel sink posts every output once and reports it") {
+    val dir = tmpDir("amp-http")
+    writeLines(dir, "events.json", ampLines)
+    val (report, events, profiles, merges) = runIntoMixpanel(Pipeline.AmplitudeStaged(dir))
+    val insertIds = events.map(_.path("properties").path("$insert_id").asText)
+    assert(insertIds.size == 3 && insertIds.distinct.size == 3 && insertIds.contains("fixed-id"))
+    assert(events.map(_.path("event").asText).toSet == Set("sign up", "page view", "click"))
+    val profileIds = profiles.map(_.path("$distinct_id").asText)
+    assert(profileIds.sorted == Seq("333", "u1"))
+    assert(profiles.forall(p => p.path("$token").asText == "t" && p.has("$ip")))
+    assert(merges.size == 1)
+    assert(merges.head.path("properties").path("$distinct_ids").elements().asScala
+      .map(_.asText).toSeq == Seq("u1", "d1"))
+    assert(report.events == 3 && report.profiles == 2 && report.merges == 1)
+    assert(report.sink.exists(_.failedBatches == 0))
+  }
+
+  test("run plans its dedup shuffles at one partition per core unless the session sets them") {
+    val key = "spark.sql.shuffle.partitions"
+    val pinned = spark.conf.get(key)
+    val dir = tmpDir("amp-parts")
+    writeLines(dir, "events.json", ampLines)
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    // planned reducer counts of the shuffles in the run's three writes
+    def shufflePartitions(): Set[Int] = {
+      plans.clear()
+      Pipeline.run(spark, Pipeline.Config(Pipeline.AmplitudeStaged(dir), mixpanelSink))
+      eventually(timeout(Span(10, Seconds)))(assert(plans.size >= 3))
+      plans.asScala.flatMap(allPlanNodes).collect {
+        case e: ShuffleExchangeLike => e.numPartitions
+      }.toSet
+    }
+    spark.listenerManager.register(listener)
+    try {
+      spark.conf.unset(key)
+      assert(shufflePartitions() == Set(spark.sparkContext.defaultParallelism))
+      assert(!spark.conf.getAll.contains(key))
+      spark.conf.set(key, "7")
+      assert(shufflePartitions() == Set(7))
+      assert(spark.conf.get(key) == "7")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set(key, pinned)
+    }
+  }
+
+  test("ga and csv profiles load into the mixpanel sink without $ip") {
+    val gaDir = tmpDir("ga-http")
+    writeLines(gaDir, "sessions.json", gaLines)
+    val csvDir = tmpDir("csv-http")
+    writeLines(csvDir, "data.csv", Seq(
+      "insert_id,action,time,guid,plan",
+      "i1,page view,1631894400,user-123,free",
+      "i2,signup,1631894500,user-456,pro"))
+    val roles = CsvTransform.CsvRoles(eventNameCol = "action", distinctIdCol = "guid",
+      timeCol = "time", insertIdCol = Some("insert_id"), createProfiles = true)
+    for ((source, ids) <- Seq(
+        Pipeline.GaStaged(gaDir) -> Seq("USER9", "fv1"),
+        Pipeline.CsvSource(csvDir, roles) -> Seq("user-123", "user-456"))) {
+      val (report, _, profiles, _) = runIntoMixpanel(source)
+      assert(profiles.map(_.path("$distinct_id").asText).sorted == ids, source)
+      assert(profiles.forall(p => !p.has("$ip") && p.has("$set")), source)
+      assert(report.profiles == ids.size && report.sink.exists(_.failedBatches == 0), source)
+    }
+  }
+
+  test("blank and whitespace-only NDJSON lines yield no row in either reader") {
+    val dir = tmpDir("blank-lines")
+    writeLines(dir, "export.json", Seq(
+      """{"event":"click","distinct_id":"u1","time":1700000000,"insert_id":"a","source":"mp","properties":{}}""",
+      "",
+      """{"event":"view","distinct_id":"u2","time":1700000001,"insert_id":"b","source":"mp","properties":{}}""",
+      "   "))
+    val auto = Sources.jsonAuto(spark, dir, Model.mpEventSchema)
+    assert(auto.good.select("insert_id").as[String].collect().sorted.toSeq == Seq("a", "b"))
+    assert(auto.corrupt.count() == 0)
+    val gated = Sources.jsonFileGate(spark, dir, Model.mpEventSchema)
+    assert(gated.good.select("insert_id").as[String].collect().sorted.toSeq == Seq("a", "b"))
+    assert(gated.badFiles.count() == 0)
   }
 }
