@@ -10,7 +10,8 @@ import org.apache.spark.util.{CollectionAccumulator, LongAccumulator}
   * accumulator (K1/K2 — proper accumulation, not the reference's
   * halve-if-over which leaves >4 MB batches oversized:
   * load/sendEventsToMixpanel.js:136-155), gzips the JSON-array body (K3),
-  * and POSTs with exponential-backoff retries + a token-bucket rate limiter
+  * and POSTs with exponential-backoff retries of 429/5xx/transport
+  * failures + a token-bucket rate limiter
   * (the reference's fixed 2 s sleep and silently-swallowed errors —
   * load/sendOther.js:261-264, load/sendEventsToMixpanel.js:112-114 — fixed
   * by construction). Per-batch responses land in an accumulator (K11
@@ -84,11 +85,17 @@ object BatchedHttpSink {
     }
   }
 
-  /** Per-task batching core: count+byte-capped accumulation, gzip, retry,
-    * rate limit. Shared by the foreachPartition writer and the DSv2
-    * DataWriter (`graft.sinks.v2.HttpImportSink`).
+  /** Retry only what can succeed later: 429, 5xx and transport
+    * exceptions (status -1). Any other non-2xx, such as a strict-mode
+    * `/import` 400, fails the batch after one attempt.
     */
-  final class PartitionBatcher(cfg: SinkConfig, transport: Transport,
+  private def retryable(status: Int): Boolean =
+    status == -1 || status == 429 || status >= 500
+
+  /** Per-task batching core: count+byte-capped accumulation, gzip, retry,
+    * rate limit.
+    */
+  private final class PartitionBatcher(cfg: SinkConfig, transport: Transport,
       onBatch: (Int, HttpResponseLite, Boolean) => Unit) {
     private val bucket = new TokenBucket(cfg.ratePerSecond)
     private val buf = new scala.collection.mutable.ArrayBuffer[String]()
@@ -109,22 +116,18 @@ object BatchedHttpSink {
       val headers = cfg.headers ++
         (if (cfg.gzipBody) Map("Content-Encoding" -> "gzip") else Map.empty) +
         ("Content-Type" -> "application/json")
+      def post(): HttpResponseLite =
+        try transport.post(cfg.url, payload, headers)
+        catch { case e: Exception => HttpResponseLite(-1, e.toString) }
       bucket.acquire()
+      var resp = post()
       var attempt = 0
-      var done = false
-      var lastResp = HttpResponseLite(-1, "")
-      while (!done && attempt <= cfg.maxRetries) {
-        lastResp =
-          try transport.post(cfg.url, payload, headers)
-          catch { case e: Exception => HttpResponseLite(-1, e.toString) }
-        done = lastResp.status >= 200 && lastResp.status < 300
-        if (!done) {
-          attempt += 1
-          if (attempt <= cfg.maxRetries)
-            Thread.sleep(cfg.initialBackoffMs * (1L << (attempt - 1)))
-        }
+      while (retryable(resp.status) && attempt < cfg.maxRetries) {
+        attempt += 1
+        Thread.sleep(cfg.initialBackoffMs * (1L << (attempt - 1)))
+        resp = post()
       }
-      onBatch(buf.size, lastResp, done)
+      onBatch(buf.size, resp, resp.status >= 200 && resp.status < 300)
       buf.clear(); bufBytes = 0L
     }
   }

@@ -36,8 +36,7 @@ object Extract {
     * cursor advances only after a page is successfully returned). A
     * `None` body ("no data", e.g. a 404 export hour) is a terminal
     * answer, never retried; after `maxAttempts` failures the last
-    * exception propagates so Spark's task retry (the outer, whole-slice
-    * level of the retry story) can take over.
+    * exception propagates and fails the extract.
     *
     * `retryable` decides WHICH failures are worth another attempt. The
     * default matches transient shapes by message/type (timeouts, 5xx,
@@ -187,14 +186,38 @@ object Extract {
     }.toSeq
   }
 
-  /** Mixpanel /engage (S10): serial session_id/page pagination (pages are
-    * cursor-chained — SURVEY §7.4.5) via [[Sources.paginatedToStaging]].
+  /** Mixpanel /engage (S10): the reference's serial cursor walk
+    * (mixpanelETL.js:144-182) via [[Sources.paginatedToStaging]]. The
+    * first GET carries no cursor; the first `session_id` and `page_size`
+    * the server reports are kept for the rest of the walk (a later reply
+    * without them must not restart the stream), and every later GET
+    * threads the `session_id` with the next `page`. A page shorter than
+    * the SERVER-reported `page_size` ends the walk: Mixpanel caps
+    * `page_size` at 1000, so comparing against a larger requested size
+    * would stop after page 0. Each page's `results` stage as one profile
+    * per line.
     */
   def mixpanelEngage(baseUrl: String, stagingDir: String, fetcher: Fetcher,
-      pageSize: Int = 1000): Seq[String] =
+      pageSize: Int = 1000): Seq[String] = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    var sessionId: Option[String] = None
+    var serverPageSize: Option[Int] = None
+    var lastPageShort = false
     Sources.paginatedToStaging(
-      page => fetcher.get(s"$baseUrl/api/2.0/engage?page=$page&page_size=$pageSize")
-        .map(b => new String(b, "UTF-8").linesIterator.toSeq)
-        .filter(_.nonEmpty),
+      page => if (lastPageShort) None else {
+        val cursor = sessionId
+          .map(s => s"&session_id=${java.net.URLEncoder.encode(s, "UTF-8")}&page=$page")
+          .getOrElse("")
+        fetcher.get(s"$baseUrl/api/2.0/engage?page_size=$pageSize$cursor").map { body =>
+          val root = mapper.readTree(body)
+          val results = Option(root.get("results")).toSeq
+            .flatMap(r => (0 until r.size).map(i => mapper.writeValueAsString(r.get(i))))
+          sessionId = sessionId.orElse(Option(root.get("session_id")).map(_.asText))
+          serverPageSize = serverPageSize.orElse(Option(root.get("page_size")).map(_.asInt))
+          lastPageShort = results.size < serverPageSize.getOrElse(pageSize)
+          results
+        }
+      },
       stagingDir)
+  }
 }

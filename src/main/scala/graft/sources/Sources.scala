@@ -173,7 +173,8 @@ object Sources {
     * serial (page N's cursor comes from page N-1 — SURVEY §7.4.5), so the
     * driver walks pages to NDJSON staging, then the cluster reads the
     * staged files in parallel. `fetch(page)` returns the page's records as
-    * JSON lines, or None when exhausted.
+    * JSON lines, or None when exhausted. A walk that still gets a page
+    * after `maxPages` throws rather than return a truncated staging set.
     */
   def paginatedToStaging(
       fetch: Int => Option[Seq[String]],
@@ -181,10 +182,12 @@ object Sources {
       maxPages: Int = 10000): Seq[String] = {
     val dir = java.nio.file.Paths.get(stagingDir)
     java.nio.file.Files.createDirectories(dir)
-    Iterator.from(0).take(maxPages)
+    Iterator.from(0)
       .map(p => p -> fetch(p))
       .takeWhile(_._2.isDefined)
       .map { case (p, Some(lines)) =>
+        if (p >= maxPages) throw new IllegalStateException(
+          s"pagination into $stagingDir still has pages after maxPages=$maxPages")
         val f = dir.resolve(f"page_$p%05d.json")
         java.nio.file.Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
         f.toString

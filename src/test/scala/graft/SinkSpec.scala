@@ -22,6 +22,18 @@ class RecordingTransport extends Transport {
   }
 }
 
+object RejectingTransport {
+  val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+}
+
+/** Answers every POST like a strict-mode `/import` rejecting the batch. */
+class RejectingTransport extends Transport {
+  def post(url: String, body: Array[Byte], headers: Map[String, String]): HttpResponseLite = {
+    RejectingTransport.calls.incrementAndGet()
+    HttpResponseLite(400, """{"error":"strict mode: invalid record"}""")
+  }
+}
+
 class SinkSpec extends SparkSpec {
   import spark.implicits._
 
@@ -80,6 +92,17 @@ class SinkSpec extends SparkSpec {
     val report2 = BatchedHttpSink.writeJson(df, cfg, new RecordingTransport)
     assert(report2.failedBatches == 1 && report2.records == 0)
     assert(report2.responses.exists(_._1 == 503))
+  }
+
+  test("a permanent 4xx fails the batch after one attempt, with its response logged") {
+    RejectingTransport.calls.set(0)
+    val df = (1 to 10).toDF("i")
+      .select(to_json(struct(col("i"))).as("json")).coalesce(1)
+    val cfg = SinkConfig(url = "http://t", maxRetries = 3, initialBackoffMs = 1)
+    val report = BatchedHttpSink.writeJson(df, cfg, new RejectingTransport)
+    assert(RejectingTransport.calls.get == 1, "a 400 was retried")
+    assert(report.failedBatches == 1 && report.records == 0)
+    assert(report.responses.map(_._1) == Seq(400))
   }
 
   test("mixpanel event shaping produces wire-format records") {
