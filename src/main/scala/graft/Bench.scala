@@ -105,17 +105,17 @@ object Bench {
     // Fixture lifecycle (VERDICT r15 missing #1): rows run in sorted-name
     // order, so a family boundary (first `_`-token change) means every
     // fixture the finished family session-cached is dead weight for the
-    // rest of the run — at sf1 the retained localCheckpoint blocks of
+    // rest of the run — at sf1 the retained checkpoint blocks of
     // three index builds put ann_serve_latency at 5.7× its solo cost.
-    // Evict the finished family's FixtureCache entries and nudge the
-    // ContextCleaner (block frees ride weak refs, so an explicit GC is
-    // what actually returns the storage memory before the next family).
+    // Evict the finished family's FixtureCache entries (their cut blocks
+    // are freed at once) and nudge the ContextCleaner for the blocks of
+    // frames held inside non-frame fixtures, which ride weak refs.
     var prevFamily: String = null
     def familyOf(name: String): String = name.takeWhile(_ != '_')
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       val fam = familyOf(name)
       if (prevFamily != null && fam != prevFamily &&
-          graft.queries.FixtureCache.evictPrefix(spark, "") > 0)
+          graft.queries.FixtureCache.evict(spark) > 0)
         System.gc()
       prevFamily = fam
       val runs = scala.collection.mutable.ArrayBuffer.empty[Double]

@@ -53,33 +53,16 @@ object Tables {
   // (directory listing) and re-reads the footer for schema inference —
   // pure driver-side metadata work repeated for every t() call (each
   // bench rep, each serve-latency batch, each verify query). Memoize the
-  // RESOLVED DataFrame per (session, path): the file listing and schema
-  // are pinned once per session, while every action on it still reads
-  // the parquet BYTES from disk (a DataFrame holds no row data — this is
-  // metadata caching, not result caching; Spark itself does the same for
-  // catalog tables via filesourcePartitionFileCacheSize). Entries die
-  // with their session (onApplicationEnd), so tests that cycle many
-  // sessions don't accumulate plans against stopped contexts.
-  private val readMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private val hookedApps =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
+  // RESOLVED DataFrame per (session, path) in the session's
+  // [[SessionScope]]: the file listing and schema are pinned once per
+  // session, while every action on it still reads the parquet BYTES from
+  // disk (a DataFrame holds no row data — this is metadata caching, not
+  // result caching; Spark itself does the same for catalog tables via
+  // filesourcePartitionFileCacheSize).
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     tune(spark)
-    val app = spark.sparkContext.applicationId
-    if (hookedApps.add(app)) {
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            readMemo.keySet.removeIf(_.startsWith(app + " "))
-            hookedApps.remove(app)
-          }
-        })
-    }
-    readMemo.computeIfAbsent(s"$app $dir/$name.parquet", _ => {
-      val df = spark.read.parquet(s"$dir/$name.parquet")
+    SessionScope.of(spark).reads.computeIfAbsent(s"$dir/$name.parquet", path => {
+      val df = spark.read.parquet(path)
       // Restore nanos-as-long timestamp columns to TimestampType (micros —
       // Spark's max precision; floor truncation matches the oracle's
       // epoch_ms//1000 semantics at second granularity).

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * large-star/small-star). Each round every node adopts the minimum label in
   * its neighborhood (including itself); converges in O(log n) rounds for
   * real identity graphs (shallow, star-heavy). Each round is one shuffle on
-  * node id; intermediate results are localCheckpoint()ed to cut lineage so
-  * the plan stays bounded on long chains.
+  * node id; intermediate results are cut through [[Cuts]] so the plan
+  * stays bounded on long chains.
   */
 object IdentityResolution {
 
@@ -43,48 +43,18 @@ object IdentityResolution {
   def connectedComponents(edges: DataFrame, maxIter: Int = 25,
       smallGraphMaxEdges: Long = SmallGraphMaxEdges,
       onRound: Int => Unit = _ => ()): DataFrame = {
-    // Reliable checkpointing when the session has a checkpoint dir (the
-    // 100 TB posture: localCheckpoint blocks die with their executor and
-    // recovery replays the whole iteration chain); localCheckpoint is the
-    // single-JVM fast path.
-    val useReliable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def cut(df: DataFrame): DataFrame =
-      if (useReliable) df.checkpoint() else df.localCheckpoint()
-    // lazy cut + count: ONE materializing job returns the probe count the
-    // loop needs, where eager-cut-then-scan paid two sequential jobs per
-    // round (VERDICT r16 #3, the walkBeam cutCounted pattern — guide §5:
-    // driver probes ride the round's own materialization)
-    def cutCounted(df: DataFrame, probe: DataFrame => DataFrame): (DataFrame, Long) = {
-      val c = if (useReliable) df.checkpoint(eager = false)
-        else df.localCheckpoint(eager = false)
-      // count the probe's internal RDD directly: the filter + count rides
-      // the checkpoint's own materializing job as ONE Spark job (a
-      // df.count() would add an AQE aggregate-exchange job on top)
-      (c, probe(c).queryExecution.toRdd.count())
-    }
-    // localCheckpoint persists its RDD for the rest of the session; once a
-    // round's successor is materialized the predecessor's blocks are dead
-    // weight crowding every later query's memory (the same leak class the
-    // Dedup operators had). Free them explicitly — safe because the data
-    // is no longer referenced by any live plan.
-    def releaseBlocks(df: DataFrame): Unit =
-      if (!useReliable)
-        df.queryExecution.logical.collectFirst {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-        }.foreach(_.unpersist(blocking = false))
-
     // one job materializes the deduped symmetric edge list AND returns
     // the size-gate count (was: eager cut + a second count job)
-    val (sym, nSym) = cutCounted(edges.select(col("src"), col("dst"))
+    val (sym, nSym) = Cuts.cutCounted(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct(), identity)
+      .distinct())
 
     // Size-adaptive fast path: small graphs finish in one collect +
     // union-find instead of O(log n) shuffle rounds whose cost at this
     // size is pure fixed job overhead.
     if (nSym <= smallGraphMaxEdges) {
       val result = smallGraphComponents(sym)
-      releaseBlocks(sym)
+      Cuts.release(sym)
       return result
     }
 
@@ -116,14 +86,14 @@ object IdentityResolution {
       // Labels only ever decrease, so changed ⇔ component < prev; the
       // changed-count rides the SAME job that materializes the round
       // (VERDICT r16 #3 — was: eager cut + a second limit(1) scan job).
-      val (updated, nChanged) = cutCounted(propagated
+      val (updated, nChanged) = Cuts.cutCounted(propagated
         .join(parents, Seq("component"), "left")
         .select(col("node"),
           least(col("component"), coalesce(col("grand"), col("component"))).as("component"),
           col("prev")),
         _.filter(col("component") < col("prev")))
       val changed = nChanged > 0
-      prevRound.foreach(releaseBlocks) // predecessor no longer referenced
+      prevRound.foreach(Cuts.release) // predecessor no longer referenced
       prevRound = Some(updated)
       labels = updated.select(col("node"), col("component"))
       converged = !changed
@@ -132,7 +102,7 @@ object IdentityResolution {
     }
     // the edge table is only consumed by the loop; the returned labels are
     // backed by the FINAL round's (still-persisted) checkpoint blocks
-    if (prevRound.isDefined) releaseBlocks(sym)
+    if (prevRound.isDefined) Cuts.release(sym)
     labels
   }
 
@@ -162,16 +132,11 @@ object IdentityResolution {
     val e = edges.select(col(srcCol).cast("string").as("s"),
         col(dstCol).cast("string").as("d"))
       .filter(col("s").isNotNull && col("d").isNotNull)
-    val useReliable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
     // materialized once; the salt probe counts and the mapping join both
     // read these blocks (same cut contract as the Long loop). Lazy cut:
-    // the vertex count rides the materializing job (VERDICT r16 #3).
-    val verts = {
-      val v = e.select(col("s").as("v")).union(e.select(col("d").as("v"))).distinct()
-      if (useReliable) v.checkpoint(eager = false)
-      else v.localCheckpoint(eager = false)
-    }
-    val n = verts.count()
+    // the vertex count rides the materializing job.
+    val (verts, n) = Cuts.cutCounted(
+      e.select(col("s").as("v")).union(e.select(col("d").as("v"))).distinct())
     var salt = 0
     while (salt < 8 &&
         verts.select(xxhash64(lit(salt), col("v"))).distinct().count() != n)

@@ -19,9 +19,8 @@ import org.apache.spark.sql.functions._
   * hash-partitioned by `src` ONCE and checkpoint-materialized; each
   * iteration is one co-located join on that partitioning plus one keyed
   * aggregation on `dst` — two exchanges per round on rank-sized rows
-  * only, never on the corpus. Iterations are lineage-cut (reliable
-  * checkpoint when a checkpoint dir is set, localCheckpoint otherwise)
-  * and each round's predecessor blocks are freed, the
+  * only, never on the corpus. Iterations are lineage-cut through
+  * [[Cuts]] and each round's predecessor blocks are freed, the
   * [[IdentityResolution.connectedComponents]] contract. Small graphs
   * (≤ `smallGraphMaxEdges`) take a driver power-iteration fast path with
   * the IDENTICAL integer arithmetic — the size-adaptive CC precedent:
@@ -35,27 +34,6 @@ object LinkGraph {
     * corpus).
     */
   val SmallGraphMaxEdges: Long = 1000000L
-
-  /** Materialize an intermediate once so every downstream reference reads
-    * its blocks instead of re-running the producing subtree (Catalyst has
-    * no common-subexpression reuse across separate DataFrame references —
-    * without the cut, each reference re-executes the whole subtree).
-    * Reliable checkpoint when a checkpoint dir is configured (the cluster
-    * path), executor-local otherwise.
-    */
-  private def cut(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
-  /** Free a superseded local checkpoint's blocks (no-op on reliable
-    * checkpoints — those are files). Only call on frames the returned
-    * result no longer depends on.
-    */
-  private def releaseBlocks(df: DataFrame): Unit =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isEmpty)
-      df.queryExecution.logical.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(blocking = false))
 
   /** PageRank over `edges(srcCol, dstCol)` (any integral node id type;
     * duplicate edges collapse). Returns (node BIGINT, rank BIGINT) with
@@ -71,53 +49,44 @@ object LinkGraph {
       s"pageRank: damping $dampNum/$dampDen is not in [0, 1]")
 
     val spark = edges.sparkSession
-    val useReliable = spark.sparkContext.getCheckpointDir.isDefined
-    def cut(df: DataFrame): DataFrame =
-      if (useReliable) df.checkpoint() else df.localCheckpoint()
-    def releaseBlocks(df: DataFrame): Unit =
-      if (!useReliable)
-        df.queryExecution.logical.collectFirst {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-        }.foreach(_.unpersist(blocking = false))
-
-    val e = cut(edges.select(col(srcCol).cast("long").as("src"),
+    // the size-gate count rides the edge cut's own materializing job
+    val (e, ne) = Cuts.cutCounted(edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst")).distinct())
-    val ne = e.count() // reads the just-materialized blocks, no recompute
     require(ne > 0, "pageRank: empty edge list")
 
     if (ne <= smallGraphMaxEdges) {
       val result = smallGraphPageRank(spark, e, iters, scale, dampNum, dampDen)
-      releaseBlocks(e)
+      Cuts.release(e)
       return result
     }
 
     val od = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // one partitioning, reused by every iteration's src-join
-    val ec = cut(e.join(od, "src").repartition(col("src")))
-    val nodes = cut(e.select(col("src").as("node"))
+    val ec = Cuts.cut(e.join(od, "src").repartition(col("src")))
+    val nodes = Cuts.cut(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
-    releaseBlocks(e)
+    Cuts.release(e)
     val n = nodes.count()
     val r0 = scale / n
     val base = r0 * (dampDen - dampNum) / dampDen
 
-    var ranks = cut(nodes.select(col("node"), lit(r0).as("rank")))
+    var ranks = Cuts.cut(nodes.select(col("node"), lit(r0).as("rank")))
     var i = 0
     while (i < iters) {
       val mass = ec.join(ranks.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), expr("rank div outdeg").as("c"))
         .groupBy("node").agg(sum("c").as("mass"))
-      val next = cut(nodes.join(mass, Seq("node"), "left")
+      val next = Cuts.cut(nodes.join(mass, Seq("node"), "left")
         .select(col("node"),
           coalesce(col("mass"), lit(0L)).as("mass"))
         .select(col("node"),
           (lit(base) + expr(s"($dampNum * mass) div $dampDen")).as("rank")))
-      releaseBlocks(ranks)
+      Cuts.release(ranks)
       ranks = next
       i += 1
     }
-    releaseBlocks(ec)
-    releaseBlocks(nodes)
+    Cuts.release(ec)
+    Cuts.release(nodes)
     // the returned frame is backed by the final round's checkpoint blocks
     ranks
   }
@@ -176,9 +145,9 @@ object LinkGraph {
     // cut once: e and nodes are read 2× per iteration — without the
     // materialization every reference re-runs the distinct (a full edge
     // shuffle ×4·iters at cluster scale).
-    val e = cut(edges.select(col(srcCol).cast("long").as("src"),
+    val e = Cuts.cut(edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")).distinct())
-    val nodes = cut(e.select(col("src").as("node"))
+    val nodes = Cuts.cut(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
 
     def normalize(raw: DataFrame, out: String): DataFrame = {
@@ -197,15 +166,15 @@ object LinkGraph {
       // (and so plan depth stays O(1) across iterations); the superseded
       // half's blocks are released immediately — at any moment at most
       // two node-sized score vectors are resident.
-      val aNext = cut(normalize(
+      val aNext = Cuts.cut(normalize(
         e.join(h.select(col("node").as("src"), col("h").as("hv")), "src")
           .groupBy(col("dst").as("node")).agg(sum("hv").as("raw")), "a"))
-      if (i > 0) releaseBlocks(a)
+      if (i > 0) Cuts.release(a)
       a = aNext
-      val hNext = cut(normalize(
+      val hNext = Cuts.cut(normalize(
         e.join(a.select(col("node").as("dst"), col("a").as("av")), "dst")
           .groupBy(col("src").as("node")).agg(sum("av").as("raw")), "h"))
-      if (i > 0) releaseBlocks(h)
+      if (i > 0) Cuts.release(h)
       h = hNext
       i += 1
     }
@@ -234,8 +203,8 @@ object LinkGraph {
     require(iters >= 1 && iters <= 50, s"labelPropagation: iters must be 1..50, got $iters")
     val dir = edges.select(col(srcCol).cast("long").as("a"),
       col(dstCol).cast("long").as("b"))
-    val und = cut(dir.union(dir.select(col("b").as("a"), col("a").as("b"))).distinct())
-    val nodes = cut(und.select(col("a").as("node")).distinct())
+    val und = Cuts.cut(dir.union(dir.select(col("b").as("a"), col("a").as("b"))).distinct())
+    val nodes = Cuts.cut(und.select(col("a").as("node")).distinct())
     var labels = nodes.select(col("node"), col("node").as("label"))
     var i = 0
     while (i < iters) {
@@ -247,9 +216,9 @@ object LinkGraph {
         .partitionBy("node").orderBy(col("c").desc, col("label"))
       val pick = cnt.withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1).select(col("node"), col("label"))
-      val next = cut(nodes.join(pick, Seq("node"), "left")
+      val next = Cuts.cut(nodes.join(pick, Seq("node"), "left")
         .select(col("node"), coalesce(col("label"), col("node")).as("label")))
-      if (i > 0) releaseBlocks(labels)
+      if (i > 0) Cuts.release(labels)
       labels = next
       i += 1
     }
@@ -280,7 +249,7 @@ object LinkGraph {
     // it is two cheap joins over e's blocks, and the eager checkpoint
     // write cost more than the recompute it saved (2.0 → 3.0 s measured).
     // Retained blocks are edge-list-bounded, the pageRank return contract.
-    val e = cut(edges.select(
+    val e = Cuts.cut(edges.select(
         least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("a"),
         greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("b"))
       .filter(col("a") < col("b")).distinct())
@@ -336,16 +305,16 @@ object LinkGraph {
     val dir = edges.select(col(srcCol).cast("long").as("a"),
         col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
-    var und = cut(dir.union(dir.select(col("b").as("a"), col("a").as("b"))).distinct())
+    var und = Cuts.cut(dir.union(dir.select(col("b").as("a"), col("a").as("b"))).distinct())
     var i = 0
     while (i < rounds) {
       val keep = und.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select("node")
-      val next = cut(und
+      val next = Cuts.cut(und
         .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
         .select("a", "b"))
-      releaseBlocks(und)
+      Cuts.release(und)
       und = next
       i += 1
     }
@@ -370,39 +339,40 @@ object LinkGraph {
     require(scale >= 1000L, s"ppr: scale too small for fixed-point ($scale)")
     require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
       s"ppr: damping $dampNum/$dampDen is not in [0, 1]")
-    val e = cut(edges.select(col(srcCol).cast("long").as("src"),
+    val e = Cuts.cut(edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")).distinct())
     val od = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val ec = cut(e.join(od, "src").repartition(col("src")))
+    val ec = Cuts.cut(e.join(od, "src").repartition(col("src")))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
     // seed flag joined once, reused by every round's base term
-    val flags = cut(nodes.join(
+    // the seed count rides the flag cut's own materializing job
+    val (flags, nSeeds) = Cuts.cutCounted(nodes.join(
       seeds.select(col(seedCol).cast("long").as("node")).distinct()
         .withColumn("__s", lit(1L)), Seq("node"), "left")
-      .select(col("node"), coalesce(col("__s"), lit(0L)).as("seed")))
-    releaseBlocks(e)
-    val nSeeds = flags.filter(col("seed") === 1L).count()
+      .select(col("node"), coalesce(col("__s"), lit(0L)).as("seed")),
+      _.filter(col("seed") === 1L))
+    Cuts.release(e)
     require(nSeeds > 0, "ppr: no seed appears in the graph")
     val r0 = scale / nSeeds
     val base = r0 * (dampDen - dampNum) / dampDen
-    var ranks = cut(flags.select(col("node"),
+    var ranks = Cuts.cut(flags.select(col("node"),
       (col("seed") * lit(r0)).as("rank")))
     var i = 0
     while (i < iters) {
       val mass = ec.join(ranks.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), expr("rank div outdeg").as("c"))
         .groupBy("node").agg(sum("c").as("mass"))
-      val next = cut(flags.join(mass, Seq("node"), "left")
+      val next = Cuts.cut(flags.join(mass, Seq("node"), "left")
         .select(col("node"),
           (col("seed") * lit(base) +
             expr(s"($dampNum * coalesce(mass, 0L)) div $dampDen")).as("rank")))
-      releaseBlocks(ranks)
+      Cuts.release(ranks)
       ranks = next
       i += 1
     }
-    releaseBlocks(ec)
-    releaseBlocks(flags)
+    Cuts.release(ec)
+    Cuts.release(flags)
     ranks
   }
 
@@ -421,22 +391,17 @@ object LinkGraph {
       rounds: Int, smallGraphMaxEdges: Long = SmallGraphMaxEdges): DataFrame = {
     require(rounds >= 1 && rounds <= 50,
       s"shortestPaths: rounds must be 1..50, got $rounds")
-    // lazy cut + count (VERDICT r16 #3/#4 pattern): the size-gate /
-    // early-exit counts ride each frame's own materializing job instead
-    // of paying a separate probe job
-    def cutCounted(df: DataFrame): (DataFrame, Long) = {
-      val c = if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
-      // one job: internal-RDD count, no AQE aggregate stage (measured r17)
-      (c, c.queryExecution.toRdd.count())
-    }
-    val (e, ne) = cutCounted(edges.select(col(srcCol).cast("long").as("src"),
+    // lazy cuts: the size-gate and early-exit counts ride each frame's
+    // own materializing job instead of paying a separate probe job
+    val (e, ne) = Cuts.cutCounted(edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"),
         col(weightCol).cast("long").as("w"))
       .filter(col("src") =!= col("dst") && col("w") >= 0L)
       .groupBy("src", "dst").agg(min("w").as("w")))
-    val (dist0, nSeeds) = cutCounted(
-      seeds.select(col(seedCol).cast("long").as("node")).distinct()
+    // a null seed reaches nothing; both tiers drop it
+    val (dist0, nSeeds) = Cuts.cutCounted(
+      seeds.select(col(seedCol).cast("long").as("node"))
+        .filter(col("node").isNotNull).distinct()
         .withColumn("dist", lit(0L)))
     // Size-adaptive driver tier (the [[pageRank]]/CC precedent): when the
     // deduped edge list + seed set are bounded driver state, the whole
@@ -446,8 +411,8 @@ object LinkGraph {
     // bit-equal to the distributed loop's.
     if (ne + nSeeds <= smallGraphMaxEdges) {
       val result = smallGraphShortestPaths(e, dist0, rounds)
-      releaseBlocks(e)
-      releaseBlocks(dist0)
+      Cuts.release(e)
+      Cuts.release(dist0)
       return result
     }
     var dist = dist0
@@ -463,18 +428,18 @@ object LinkGraph {
       // early exit (VERDICT r16 #4): an empty improved frontier closes
       // the wavefront — every later round relaxes nothing and dist is
       // already the fixed point, so the remaining rounds are free
-      val (improved, nImp) = cutCounted(joined.filter(col("dist").isNull ||
+      val (improved, nImp) = Cuts.cutCounted(joined.filter(col("dist").isNull ||
           col("cand") < col("dist"))
         .select(col("node"), col("cand").as("dist")))
       if (nImp == 0L) {
-        releaseBlocks(improved)
+        Cuts.release(improved)
         open = false
       } else {
-        val nextDist = cut(dist.join(improved.select(col("node")), Seq("node"),
+        val nextDist = Cuts.cut(dist.join(improved.select(col("node")), Seq("node"),
             "left_anti")
           .unionByName(improved))
-        releaseBlocks(dist)
-        if (i > 0) releaseBlocks(frontier)
+        Cuts.release(dist)
+        if (i > 0) Cuts.release(frontier)
         dist = nextDist
         frontier = improved
       }
@@ -533,23 +498,19 @@ object LinkGraph {
       smallGraphMaxEdges: Long = SmallGraphMaxEdges): DataFrame = {
     require(rounds >= 1 && rounds <= 50,
       s"bfsDistance: rounds must be 1..50, got $rounds")
-    def cutCounted(df: DataFrame): (DataFrame, Long) = {
-      val c = if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
-      // one job: internal-RDD count, no AQE aggregate stage (measured r17)
-      (c, c.queryExecution.toRdd.count())
-    }
-    val (e, ne) = cutCounted(edges.select(col(srcCol).cast("long").as("src"),
+    val (e, ne) = Cuts.cutCounted(edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct())
-    val (dist0, nSeeds) = cutCounted(
-      seeds.select(col(seedCol).cast("long").as("node")).distinct()
+    // null seeds are dropped, as in [[shortestPaths]]
+    val (dist0, nSeeds) = Cuts.cutCounted(
+      seeds.select(col(seedCol).cast("long").as("node"))
+        .filter(col("node").isNotNull).distinct()
         .withColumn("dist", lit(0L)))
     // size-adaptive driver tier + early exit — see [[shortestPaths]]
     if (ne + nSeeds <= smallGraphMaxEdges) {
       val result = smallGraphBfs(e, dist0, rounds)
-      releaseBlocks(e)
-      releaseBlocks(dist0)
+      Cuts.release(e)
+      Cuts.release(dist0)
       return result
     }
     var dist = dist0
@@ -564,14 +525,14 @@ object LinkGraph {
       // an empty fresh frontier means every reachable-within-`rounds`
       // node already has its hop count — the remaining rounds are no-ops
       val (fresh, nFresh) =
-        cutCounted(reached.join(dist.select("node"), Seq("node"), "left_anti"))
+        Cuts.cutCounted(reached.join(dist.select("node"), Seq("node"), "left_anti"))
       if (nFresh == 0L) {
-        releaseBlocks(fresh)
+        Cuts.release(fresh)
         open = false
       } else {
-        val nextDist = cut(dist.unionByName(fresh))
-        releaseBlocks(dist)
-        if (i > 0) releaseBlocks(frontier)
+        val nextDist = Cuts.cut(dist.unionByName(fresh))
+        Cuts.release(dist)
+        if (i > 0) Cuts.release(frontier)
         dist = nextDist
         frontier = fresh
       }

@@ -126,15 +126,6 @@ object SuffixArray {
       wideCap: Int = 1024): DataFrame = {
     require(initWidth >= 4, s"initWidth must be >= 4, got $initWidth")
     val spark = docs.sparkSession
-    val useReliable = spark.sparkContext.getCheckpointDir.isDefined
-    def cut(df: DataFrame): DataFrame =
-      if (useReliable) df.checkpoint() else df.localCheckpoint()
-    def releaseBlocks(df: DataFrame): Unit =
-      if (!useReliable)
-        df.queryExecution.logical.collectFirst {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-        }.foreach(_.unpersist(blocking = false))
-
     val base = graft.Tables.ensureMinParallelism(
       docs.filter(col(idCol).isNotNull && length(col(textCol)) > 0))
       .select(col(idCol).as("doc"), col(textCol).as("__txt"))
@@ -182,7 +173,7 @@ object SuffixArray {
         .select(col("doc"), col("pos"), col("sa_pos"))
 
     val (ranked0, n) = classRankPass(suf0, Seq("__k"), bucket0, "r")
-    var cur = cut(ranked0.select(col("doc"), col("pos"), col("r")))
+    var cur = Cuts.cut(ranked0.select(col("doc"), col("pos"), col("r")))
     var prev = cur
 
     var width = effInitWidth.toLong
@@ -202,7 +193,7 @@ object SuffixArray {
         coalesce(max(when(col("__t") === 2L, col("r"))), lit(-1L)).as("__r2"),
         coalesce(max(when(col("__t") === 3L, col("r"))), lit(-1L)).as("__r3"))
       val last = round == nRounds
-      val g = cut(gathered)
+      val g = Cuts.cut(gathered)
       val rKeys = Seq("__r0", "__r1", "__r2", "__r3")
       val rBucket =
         expr(s"CAST(__r0 * $buckets AS BIGINT) div ${math.max(n, 1L)}")
@@ -215,10 +206,10 @@ object SuffixArray {
       } else {
         val (ranked, _) = classRankPass(g, rKeys, rBucket, "__nr",
           maxBuckets = buckets + 1)
-        val next = cut(ranked.select(col("doc"), col("pos"),
+        val next = Cuts.cut(ranked.select(col("doc"), col("pos"),
           col("__nr").as("r")))
-        releaseBlocks(prev)
-        releaseBlocks(g)
+        Cuts.release(prev)
+        Cuts.release(g)
         prev = next
         cur = next
       }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
-import graft.operators.Ann
+import graft.operators.{Ann, Cuts}
 
 /** Bench-only entries: perf-tracked surfaces with NO DuckDB oracle row —
   * they are deliberately NOT part of [[graft.SparkEntry.queries]] (the
@@ -325,21 +325,21 @@ object BenchOnlyOps {
       t(s, dir, "documents")
         .filter(graft.operators.TextAnalysis.gopherPass(col("text")))),
     "funnel_stage2_exact" -> ((s, dir) => {
-      val q = t(s, dir, "documents")
-        .filter(graft.operators.TextAnalysis.gopherPass(col("text")))
-        .localCheckpoint()
+      val q = Cuts.cut(t(s, dir, "documents")
+        .filter(graft.operators.TextAnalysis.gopherPass(col("text"))))
       val fp = q.withColumn("fp", xxhash64(col("text")))
       fp.join(fp.groupBy("fp").agg(min("doc_id").as("keep")), "fp")
         .filter(col("doc_id") === col("keep"))
     }),
     "funnel_stage3_neardup" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val q = docs.filter(graft.operators.TextAnalysis.gopherPass(col("text")))
-        .localCheckpoint()
+      val q = Cuts.cut(
+        docs.filter(graft.operators.TextAnalysis.gopherPass(col("text"))))
       val fp = q.withColumn("fp", xxhash64(col("text")))
-      val exact = fp.join(fp.groupBy("fp").agg(min("doc_id").as("keep")), "fp")
-        .filter(col("doc_id") === col("keep"))
-        .select(docs.columns.map(col): _*).localCheckpoint()
+      val exact = Cuts.cut(
+        fp.join(fp.groupBy("fp").agg(min("doc_id").as("keep")), "fp")
+          .filter(col("doc_id") === col("keep"))
+          .select(docs.columns.map(col): _*))
       val dupB = graft.operators.Dedup.minhashLshPairs(exact, "doc_id",
           "text", n = 3, numHashes = 32, bandSize = 4, threshold = 0.8)
         .select(col("id_b").as("doc_id")).distinct()
@@ -351,16 +351,17 @@ object BenchOnlyOps {
       // only unpriced remainder was the resample + per-stage aggregate
       // tail; composite − stage4 now isolates the aggregates alone)
       val docs = t(s, dir, "documents")
-      val q = docs.filter(graft.operators.TextAnalysis.gopherPass(col("text")))
-        .localCheckpoint()
+      val q = Cuts.cut(
+        docs.filter(graft.operators.TextAnalysis.gopherPass(col("text"))))
       val fp = q.withColumn("fp", xxhash64(col("text")))
-      val exact = fp.join(fp.groupBy("fp").agg(min("doc_id").as("keep")), "fp")
-        .filter(col("doc_id") === col("keep"))
-        .select(docs.columns.map(col): _*).localCheckpoint()
+      val exact = Cuts.cut(
+        fp.join(fp.groupBy("fp").agg(min("doc_id").as("keep")), "fp")
+          .filter(col("doc_id") === col("keep"))
+          .select(docs.columns.map(col): _*))
       val dupB = graft.operators.Dedup.minhashLshPairs(exact, "doc_id",
           "text", n = 3, numHashes = 32, bandSize = 4, threshold = 0.8)
         .select(col("id_b").as("doc_id")).distinct()
-      val nd = exact.join(dupB, Seq("doc_id"), "left_anti").localCheckpoint()
+      val nd = Cuts.cut(exact.join(dupB, Seq("doc_id"), "left_anti"))
       val sel = graft.operators.Sampling.dsirResample(
           nd, docs.filter(col("lang") === "en"), "doc_id", "text",
           k = 150, buckets = 512)
@@ -530,12 +531,12 @@ object BenchOnlyOps {
       // Fixture lifecycle (VERDICT r15 missing #1): by sorted-name order
       // every FixtureCache user (the oracle ann_* rows) has already run —
       // only ann_topk_bruteforce follows in this family — so the oracle
-      // fixtures' retained localCheckpoint blocks are pure storage-memory
+      // fixtures' retained checkpoint blocks are pure storage-memory
       // pressure here (sf1 full-session: 295 s vs 51.5 s solo). Evict
       // them and nudge the ContextCleaner so the percentile batches run
       // under the same memory conditions as a solo capture. The serve
       // tiers below read parquet-backed tables (served*), not the cache.
-      if (FixtureCache.evictPrefix(s, "") > 0) System.gc()
+      if (FixtureCache.evict(s) > 0) System.gc()
       val nBatches = sys.env.getOrElse("SPARK_GRAFT_LAT_BATCHES", "8").toInt
       def oneQuery(i: Int) =
         t(s, dir, "embeddings").filter(col("vec_id") === i % 100)

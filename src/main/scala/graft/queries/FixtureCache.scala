@@ -1,8 +1,8 @@
 package graft.queries
 
-import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SessionScope
+import graft.operators.Cuts
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Session-scoped memo for expensive query fixtures (VERDICT r14 #1b —
   * "share the session-scoped fixture/index builds across the ~30 ann_*
@@ -13,75 +13,45 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `serveGraph(nnDescent(embeddings, k=4, iters=2))` standing index and
   * two more the identical layered index. The builds are deterministic
   * (hash-seeded init, deterministic tie-breaks), so sharing one
-  * localCheckpoint-materialized copy is result-identical to rebuilding —
-  * it only removes the repeated build jobs from the verify wall time.
+  * [[Cuts]]-materialized copy is result-identical to rebuilding — it
+  * only removes the repeated build jobs from the verify wall time.
   *
-  * Keys are scoped by `applicationId` so a cached frame never leaks
-  * across SparkSessions (a checkpointed RDD dies with its context).
-  * `computeIfAbsent` makes concurrent verify threads block on the ONE
-  * in-flight build of their key instead of racing duplicate builds.
-  *
-  * Lifecycle (ADVICE r15): entries used to outlive their session — a
-  * multi-session test JVM accumulated dead localCheckpoint-backed frames
-  * for the JVM lifetime. Now the first access per application registers a
-  * SparkListenerApplicationEnd hook that drops every key of that
-  * application, and [[evictPrefix]] lets long bench sessions free a row
-  * family's fixtures once the run moves past it.
+  * Entries live in the session's [[graft.SessionScope]], so a cached
+  * frame is never served to another SparkSession (not even one from
+  * `newSession()`, which shares the context but not the conf) and dies
+  * with its application. `computeIfAbsent` makes concurrent verify
+  * threads block on the ONE in-flight build of their key instead of
+  * racing duplicate builds. [[evict]] lets long bench sessions free a
+  * finished row family's fixtures.
   */
 object FixtureCache {
-  private val cache = new ConcurrentHashMap[String, DataFrame]()
-
-  /** Non-DataFrame fixtures (codebooks, composite indexes) — the caller
-    * owns materialization (localCheckpoint any DataFrame members so the
-    * shared copy is compute-once, not lineage-shared).
-    */
-  private val anyCache = new ConcurrentHashMap[String, AnyRef]()
-
-  /** appIds with the end-of-application eviction listener installed. */
-  private val hooked = ConcurrentHashMap.newKeySet[String]()
-
-  private def appScope(spark: SparkSession, key: String): String = {
-    val appId = spark.sparkContext.applicationId
-    if (hooked.add(appId)) {
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
-          cache.keySet.removeIf(_.startsWith(s"$appId|"))
-          anyCache.keySet.removeIf(_.startsWith(s"$appId|"))
-          hooked.remove(appId)
-        }
-      })
-    }
-    s"$appId|$key"
-  }
 
   def cached(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    cache.computeIfAbsent(appScope(spark, key), _ => build.localCheckpoint())
+    cachedAny(spark, key)(Cuts.cut(build))
 
-  def cachedAny[T <: AnyRef](spark: SparkSession, key: String)(build: => T): T =
-    anyCache.computeIfAbsent(appScope(spark, key), _ => build).asInstanceOf[T]
-
-  /** Drop (and unpersist) every fixture of this session whose key starts
-    * with `keyPrefix` — the bench driver calls this at row-family
-    * boundaries so a full-surface session doesn't hold every family's
-    * standing indexes at once (VERDICT r15 missing #1: `ann_serve_latency`
-    * ran 5.7× its solo cost behind three retained index builds at sf1).
+  /** Non-DataFrame fixtures (codebooks, composite indexes) — the caller
+    * owns materialization (cut any DataFrame members so the shared copy
+    * is compute-once, not lineage-shared).
     */
-  def evictPrefix(spark: SparkSession, keyPrefix: String): Int = {
-    val scope = s"${spark.sparkContext.applicationId}|$keyPrefix"
-    var n = 0
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.startsWith(scope)) {
-        try e.getValue.unpersist(blocking = false) catch { case _: Throwable => }
-        it.remove()
-        n += 1
-      }
+  def cachedAny[T <: AnyRef](spark: SparkSession, key: String)(build: => T): T =
+    SessionScope.of(spark).fixtures.computeIfAbsent(key, _ => build)
+      .asInstanceOf[T]
+
+  /** Drop every fixture of this session and free the blocks of the cut
+    * frames. `graft.Bench` calls this at row-family boundaries so a
+    * full-surface session doesn't hold every family's standing indexes
+    * at once (`ann_serve_latency` ran 5.7× its solo cost behind three
+    * retained index builds at sf1). Returns the number of entries
+    * dropped.
+    */
+  def evict(spark: SparkSession): Int = {
+    val fixtures = SessionScope.of(spark).fixtures
+    val n = fixtures.size
+    fixtures.values.forEach {
+      case ds: Dataset[_] => Cuts.release(ds.toDF())
+      case _ =>
     }
-    val it2 = anyCache.keySet.iterator()
-    while (it2.hasNext) {
-      if (it2.next().startsWith(scope)) { it2.remove(); n += 1 }
-    }
+    fixtures.clear()
     n
   }
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.Tables.t
 import graft.functions.Fns
-import graft.operators.{Ann, Contamination, Dedup, LinkGraph, Multimodal, Retrieval, SuffixArray, TextAnalysis, IdentityResolution, WebCuration}
+import graft.operators.{Ann, Contamination, Cuts, Dedup, LinkGraph, Multimodal, Retrieval, SuffixArray, TextAnalysis, IdentityResolution, WebCuration}
 
 /** Training-data pipeline operators (dedup, similarity search, multimodal,
   * text analysis) as verifiable queries over `documents`/`embeddings`.
@@ -57,7 +57,7 @@ object TrainingDataOps {
     FixtureCache.cachedAny(s, s"ivfPq|8|4|8|$byResidual|$dir") {
       val idx = Ann.ivfPqBuild(t(s, dir, "embeddings"), "vec_id",
         "embedding", nLists = 8, m = 4, k = 8, byResidual)
-      idx.copy(encoded = idx.encoded.localCheckpoint())
+      idx.copy(encoded = Cuts.cut(idx.encoded))
     }
 
   /** DuckDB SQL for the ADC-scored graph walk (+ exact re-rank):
@@ -7353,12 +7353,10 @@ object TrainingDataOps {
         // materialization beats re-scanning parquet + re-tokenizing in
         // the three extra consumers.) Identical results (same texts →
         // same counts).
-        val docs = t(s, dir, "documents")
+        val docs = Cuts.cut(t(s, dir, "documents")
           .withColumn("__toks",
-            TextAnalysis.tokenCount(col("text")).cast("long"))
-          .localCheckpoint()
-        val quality = docs.filter(TextAnalysis.gopherPass(col("text")))
-          .localCheckpoint()
+            TextAnalysis.tokenCount(col("text")).cast("long")))
+        val quality = Cuts.cut(docs.filter(TextAnalysis.gopherPass(col("text"))))
         // exact stage keys its shuffles on xxhash64(text) — the 8-byte
         // discipline of Dedup.incrementalDedup — NOT on the text itself:
         // keyed on full text, every surviving corpus byte crosses the
@@ -7368,16 +7366,14 @@ object TrainingDataOps {
         // (64-bit keys; the library-wide substringDedup contract), and
         // the oracle keeps PARTITION BY text — same survivors either way.
         val fp = quality.withColumn("fp", xxhash64(col("text")))
-        val exact = fp.join(
+        val exact = Cuts.cut(fp.join(
             fp.groupBy("fp").agg(min("doc_id").as("keep")), "fp")
           .filter(col("doc_id") === col("keep"))
-          .select(docs.columns.map(col): _*)
-          .localCheckpoint()
+          .select(docs.columns.map(col): _*))
         val dupB = Dedup.minhashLshPairs(exact, "doc_id", "text",
             n = 3, numHashes = NumHashes, bandSize = BandSize, threshold = 0.8)
           .select(col("id_b").as("doc_id")).distinct()
-        val nd = exact.join(dupB, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
+        val nd = Cuts.cut(exact.join(dupB, Seq("doc_id"), "left_anti"))
         val sel = graft.operators.Sampling.dsirResample(
             nd, docs.filter(col("lang") === "en"), "doc_id", "text",
             k = 150, buckets = 512)
@@ -7473,17 +7469,14 @@ object TrainingDataOps {
           .select(col("doc_id"),
             when(col("doc_id") % 17 === 5, col("payload").substr(1, 20))
               .otherwise(col("payload")).as("payload"))
-        val hashed = Multimodal.perceptualHash(s, bin).toDF()
-          .localCheckpoint()
+        val hashed = Cuts.cut(Multimodal.perceptualHash(s, bin).toDF())
         val ok = hashed.filter(col("status") === "ok")
-        val deduped = Dedup.keepBestPerKey(ok,
+        val deduped = Cuts.cut(Dedup.keepBestPerKey(ok,
             Seq("ahash_hi", "ahash_lo"), Seq(col("doc_id")),
-            Seq("doc_id", "in_w", "in_h"))
-          .localCheckpoint()
-        val captioned = deduped
+            Seq("doc_id", "in_w", "in_h")))
+        val captioned = Cuts.cut(deduped
           .join(docs.select(col("doc_id"), col("text")), "doc_id")
-          .filter(TextAnalysis.tokenCount(col("text")) >= 60)
-          .localCheckpoint()
+          .filter(TextAnalysis.tokenCount(col("text")) >= 60))
         val sharded = graft.operators.Packing.shardLayout(
           captioned.withColumn("n_px",
             (col("in_w").cast("long") * col("in_h"))),

@@ -336,5 +336,19 @@ class Round11fOpsSpec extends SparkSpec {
       bfsEdges, "src", "dst", iso, "node", rounds = 3,
       smallGraphMaxEdges = 0L))
     assert(iA === iB && iA(99L) === 0L)
+    // a null seed reaches nothing and yields no row in either tier
+    val withNull = Seq(Some(0L), None).toDF("node")
+    val nA = toMap(LinkGraph.shortestPaths(
+      edges, "src", "dst", "w", withNull, "node", rounds = 12))
+    val nB = toMap(LinkGraph.shortestPaths(
+      edges, "src", "dst", "w", withNull, "node", rounds = 12,
+      smallGraphMaxEdges = 0L))
+    assert(nA === viaDriver && nB === viaDriver)
+    val nC = toMap(LinkGraph.bfsDistance(
+      bfsEdges, "src", "dst", withNull, "node", rounds = 12))
+    val nD = toMap(LinkGraph.bfsDistance(
+      bfsEdges, "src", "dst", withNull, "node", rounds = 12,
+      smallGraphMaxEdges = 0L))
+    assert(nC === bA && nD === bA)
   }
 }
