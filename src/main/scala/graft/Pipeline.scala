@@ -39,9 +39,9 @@ object Pipeline {
 
   final case class Config(source: Source, destination: Destination)
 
-  /** `release` frees any shared-scan cache backing the outputs (J2) — run()
-    * calls it once every output is written; leaving it cached would crowd
-    * executor memory for the rest of the session.
+  /** `release` frees whatever a source holds for its outputs; run() calls
+    * it once every output is written. No source in [[transform]] sets it:
+    * each output scans its staged input on its own (J2).
     */
   final case class Outputs(events: DataFrame, profiles: Option[DataFrame],
       mergePairs: Option[DataFrame], release: () => Unit = () => ())
@@ -57,7 +57,7 @@ object Pipeline {
     case AmplitudeStaged(path, tag) =>
       val amp = Sources.staged(spark, path, Model.amplitudeSchema)
       val out = AmplitudeTransform(amp, tag)
-      Outputs(out.events, Some(out.profiles), Some(out.mergePairs), out.release)
+      Outputs(out.events, Some(out.profiles), Some(out.mergePairs))
     case GaStaged(path) =>
       val ga = Sources.staged(spark, path, Model.gaSessionSchema)
       Outputs(GaTransform.events(spark, ga), Some(GaTransform.profiles(spark, ga)), None)
@@ -101,6 +101,10 @@ object Pipeline {
     * `$distinct_id`), profile `$set` carries `$ignore_time`, and Mixpanel
     * `$merge` is retroactive.
     *
+    * Each write scans the staged input itself, pruned to the columns its
+    * output reads (J2), so every write starts at once; none waits for a
+    * shared-scan cache to fill, and no cache holds the decoded input.
+    *
     * Event counts are taken with `observe()` DURING the sink write — the
     * reference's extracted = transformed = imported reconciliation
     * (SURVEY §5) without a second scan of the data.
@@ -110,7 +114,7 @@ object Pipeline {
     withCoreShuffles(spark) {
       val out = transform(spark, config.source)
       try load(out, config.destination)
-      finally out.release() // drop any shared-scan cache (J2) once written
+      finally out.release()
     }
   }
 
@@ -172,7 +176,7 @@ object Pipeline {
 
   /** Runs the given writes together on a driver pool and waits for every
     * one. The first failure, in argument order, is rethrown only after all
-    * have finished, so none still reads a cache the caller then releases.
+    * have finished, so no write is still running when the run returns.
     * The pool's threads start here and so inherit the caller's Spark local
     * properties (job group, scheduler pool).
     */

@@ -5,9 +5,12 @@ import org.apache.spark.sql.functions._
 import graft.functions.Fns
 
 /** Amplitude → canonical transform pack (SURVEY §3.1; reference
-  * transform/amplitudeToMixpanel.js). One cached scan fans out to three
-  * outputs (events / profiles / merge pairs) — SURVEY §2.4 J2: Catalyst
-  * does not CSE across actions, so the caller caches the input once.
+  * transform/amplitudeToMixpanel.js). One input fans out to three
+  * outputs (events / profiles / merge pairs) — SURVEY §2.4 J2. Catalyst
+  * does not share a scan across actions, so each output scans the input
+  * on its own; over [[graft.sources.Sources.staged]] each scan reads only
+  * the columns its output uses, which costs less than caching the whole
+  * decoded input for all three.
   *
   * All steps are column expressions (no UDFs): rename pack P4, ID
   * coalescing P6, time normalization P7, md5 insert-id P8, spread-precedence
@@ -31,12 +34,7 @@ object AmplitudeTransform {
     "city" -> "$city"
   )
 
-  /** `release()` drops the shared-scan cache (J2) once all three outputs
-    * are consumed — the cache must not outlive the fan-out in a
-    * multi-query session.
-    */
-  case class Outputs(events: DataFrame, profiles: DataFrame, mergePairs: DataFrame,
-      release: () => Unit = () => ())
+  case class Outputs(events: DataFrame, profiles: DataFrame, mergePairs: DataFrame)
 
   private def nonNullMap(c: org.apache.spark.sql.Column) =
     coalesce(c, map().cast("map<string,string>"))
@@ -126,13 +124,7 @@ object AmplitudeTransform {
     Dedup.exactFirstWins(pairs, Seq("insert_id"), Seq("time"))
   }
 
-  /** Full three-way fan-out from one cached scan (J2). The caller owns the
-    * cache lifetime via `Outputs.release` — call it after all three
-    * outputs are materialized.
-    */
-  def apply(amp: DataFrame, importTag: Option[String] = None): Outputs = {
-    val cached = amp.cache()
-    Outputs(events(cached, importTag), profiles(cached), mergePairs(cached),
-      () => { cached.unpersist(blocking = false); () })
-  }
+  /** Full three-way fan-out (J2): one scan of `amp` per output. */
+  def apply(amp: DataFrame, importTag: Option[String] = None): Outputs =
+    Outputs(events(amp, importTag), profiles(amp), mergePairs(amp))
 }

@@ -543,6 +543,8 @@ object Ann {
         telemetry += (r -> changed)
         converged = threshold.exists(changed < _)
       }
+      // a cut `next` no longer reads `cur`; the final uncut round still does
+      if (!isFinal) Cuts.release(cur)
       cur = next
     }
     (rankTopK(score(cur), k), telemetry.toSeq)
@@ -1335,7 +1337,12 @@ object Ann {
       // intermediate rounds re-read `sel` (twice per round) — cut; the
       // FINAL round's selection is consumed exactly once by the caller's
       // action, so its checkpoint job is pure overhead (guide §2.4)
-      sel = if (round == m) merged else Cuts.cut(merged)
+      if (round == m) sel = merged
+      else {
+        val superseded = sel
+        sel = Cuts.cut(merged)
+        Cuts.release(superseded)
+      }
     }
     sel.select(col("src"), col("sid").as("dst"))
   }

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** File/staged sources (SURVEY §2.1).
   *
@@ -76,12 +76,10 @@ object Sources {
     catch { case _: Exception => false }
 
   def jsonAuto(spark: SparkSession, path: String, schema: StructType,
-      hadoopOpts: Map[String, String] = Map.empty): JsonRead = {
-    if (sniffIsWholeFileJson(spark, path, hadoopOpts)) {
-      val multi = spark.read.options(hadoopOpts).schema(schema)
-        .option("multiLine", "true").json(path)
-      JsonRead(multi, spark.emptyDataFrame)
-    } else {
+      hadoopOpts: Map[String, String] = Map.empty): JsonRead =
+    if (sniffIsWholeFileJson(spark, path, hadoopOpts))
+      JsonRead(wholeFile(spark, path, schema, hadoopOpts), spark.emptyDataFrame)
+    else {
       // Parse over a text scan with from_json instead of the raw JSON
       // reader: (a) Spark disallows corrupt-column-only queries on raw
       // JSON scans (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and (b) this keeps
@@ -89,10 +87,8 @@ object Sources {
       // (the common case) pay exactly one pass; consuming both branches
       // costs a cheap second text scan, never a cluster-wide cache of the
       // raw input.
-      val withCorrupt = schema.add("_corrupt_record", org.apache.spark.sql.types.StringType)
-      val parsed = spark.read.options(hadoopOpts).textFile(path).toDF("line")
-        .withColumn("j", from_json(col("line"), withCorrupt,
-          Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record")))
+      val parsed = parseLines(spark.read.options(hadoopOpts).textFile(path).toDF("line"),
+        schema)
       // a blank line parses to a null struct: neither a record nor corrupt
       val good = parsed.filter(col("j").isNotNull && col("j._corrupt_record").isNull)
         .select(col("j.*")).drop("_corrupt_record")
@@ -100,7 +96,22 @@ object Sources {
         .select(col("line").as("_corrupt_record"))
       JsonRead(good, corrupt)
     }
-  }
+
+  private def wholeFile(spark: SparkSession, path: String, schema: StructType,
+      hadoopOpts: Map[String, String] = Map.empty): DataFrame =
+    spark.read.options(hadoopOpts).schema(schema).option("multiLine", "true").json(path)
+
+  /** Adds `j`: the `line` column parsed against `schema` plus
+    * `_corrupt_record`, null for a blank line. The parse sits under a
+    * one-element `explode`, a Generate that Catalyst pushes no filter
+    * through; as a plain column, a filter on `j` is pushed below the
+    * projection and `from_json` runs once in the Filter and again in the
+    * Project, so every line is parsed twice.
+    */
+  private def parseLines(lines: DataFrame, schema: StructType): DataFrame =
+    lines.withColumn("j", explode(array(from_json(col("line"),
+      schema.add("_corrupt_record", StringType),
+      Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record")))))
 
   case class FileGatedRead(good: DataFrame, badFiles: DataFrame)
 
@@ -121,11 +132,8 @@ object Sources {
     */
   def jsonFileGate(spark: SparkSession, path: String, schema: StructType,
       hadoopOpts: Map[String, String] = Map.empty): FileGatedRead = {
-    val withCorrupt = schema.add("_corrupt_record", org.apache.spark.sql.types.StringType)
-    val parsed = spark.read.options(hadoopOpts).text(path)
-      .select(input_file_name().as("fname"), col("value").as("line"))
-      .withColumn("j", from_json(col("line"), withCorrupt,
-        Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record")))
+    val parsed = parseLines(spark.read.options(hadoopOpts).text(path)
+      .select(input_file_name().as("fname"), col("value").as("line")), schema)
     val badFiles = parsed.filter(col("j._corrupt_record").isNotNull)
       .groupBy("fname").agg(count(lit(1)).as("n_corrupt"))
     val good = parsed.filter(col("j").isNotNull) // blank lines parse to null
@@ -134,9 +142,29 @@ object Sources {
     FileGatedRead(good, badFiles)
   }
 
-  /** S11: pre-extracted local path bypass — just a path to the reader. */
+  /** S11: pre-extracted local path bypass — just a path to the reader.
+    *
+    * NDJSON goes to Spark's JSON source in DROPMALFORMED mode, so each
+    * query over the result scans only the columns it reads and parses each
+    * line once. A consumer fanning one input out to several outputs gets
+    * one pruned scan per output instead of a shared-scan cache.
+    *
+    * The contract is the reference's F7 (amplitudeToMixpanel.js:58-67
+    * skips only lines that fail `JSON.parse`):
+    *  - a line that is not valid JSON, or a JSON `null`, yields no row;
+    *  - a line whose field does not fit `schema` is dropped only from
+    *    queries that read that field;
+    *  - a root-level array line yields one row per element;
+    *  - a blank line yields no row, and `count()` works.
+    *
+    * There is no corrupt complement here: Spark refuses a raw-JSON query
+    * that reads only `_corrupt_record`. [[jsonAuto]] and [[jsonFileGate]]
+    * return one and so keep `from_json` over a text scan, with whole-row
+    * schema validation.
+    */
   def staged(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    jsonAuto(spark, path, schema).good
+    if (sniffIsWholeFileJson(spark, path)) wholeFile(spark, path, schema)
+    else spark.read.schema(schema).option("mode", "DROPMALFORMED").json(path)
 
   /** S5: object-store scan (GCS-style). The reference lists a GCS bucket
     * and downloads session files one by one (extract/googleAnalytics.js:

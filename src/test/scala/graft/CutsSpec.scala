@@ -1,7 +1,7 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicInteger
-import graft.operators.{Cuts, IdentityResolution}
+import graft.operators.{Ann, Cuts, IdentityResolution}
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -51,5 +51,30 @@ class CutsSpec extends SparkSpec {
       Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x"))
     // counting the lazy vertex cut with df.count() instead ran 13 jobs
     assert(jobs === 12)
+  }
+
+  test("nnDescent and rngPrune release every superseded round's cut") {
+    import spark.implicits._
+    val emb = (0 until 40).map(i => (i.toLong, Seq.tabulate(4)(j => math.sin(i * 0.7 + j))))
+      .toDF("vec_id", "embedding")
+    val sc = spark.sparkContext
+    def persistedBy[T](body: => T): (T, Int) = {
+      val before = sc.getPersistentRDDs.keySet
+      val r = body
+      (r, (sc.getPersistentRDDs.keySet -- before).size)
+    }
+    // only the round-2 cut, which the final uncut round reads, outlives the call
+    val (adj, byBuild) = persistedBy {
+      val knn = Ann.nnDescent(emb, "vec_id", "embedding", k = 4, iters = 3)
+      knn.collect()
+      knn
+    }
+    assert(byBuild === 1)
+    // a counting build cuts every round; only the last one stays
+    assert(persistedBy(Ann.nnDescentConvergence(emb, "vec_id", "embedding",
+      k = 4, iters = 3).collect())._2 === 1)
+    // `ranked` and the round-2 selection stay
+    val graph = Ann.serveGraph(adj).localCheckpoint()
+    assert(persistedBy(Ann.rngPrune(graph, emb, "vec_id", "embedding", 3).collect())._2 === 2)
   }
 }

@@ -4,6 +4,8 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
@@ -344,5 +346,70 @@ class EtlPipelineSpec extends SparkSpec {
     val gated = Sources.jsonFileGate(spark, dir, Model.mpEventSchema)
     assert(gated.good.select("insert_id").as[String].collect().sorted.toSeq == Seq("a", "b"))
     assert(gated.badFiles.count() == 0)
+    assert(Sources.staged(spark, dir, Model.mpEventSchema).count() == 2)
+  }
+
+  /** `ampLines(0)` plus one line of each kind the staged contract names. */
+  val ampEdgeLines: Seq[String] = Seq(
+    ampLines(0),
+    // truncated and non-JSON: would give a profile and a merge pair if parsed
+    """{"event_type":"trunc","user_id":"u7","device_id":"d7","amplitude_id":7,"user_properties":{"a":"b"}""",
+    """not json {"event_type":"junk","user_id":"u8","device_id":"d8"}""",
+    // a map field holding a string
+    """{"event_type":"badmap","user_id":"u3","device_id":"d3","amplitude_id":3,"event_time":"2021-09-17 12:40:00","event_properties":"x","user_properties":{"t":"g"}}""",
+    "",
+    """[{"event_type":"arr1","device_id":"d5","amplitude_id":5,"event_time":"2021-09-17 12:41:00"},{"event_type":"arr2","device_id":"d6","amplitude_id":6,"event_time":"2021-09-17 12:42:00"}]"""
+  )
+
+  test("amplitude staged fan-out caches nothing") {
+    val dir = tmpDir("amp-nocache")
+    writeLines(dir, "events.json", ampLines)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = Pipeline.transform(spark, Pipeline.AmplitudeStaged(dir))
+    assert(out.events.collect().length == 3)
+    assert(out.profiles.get.collect().length == 2)
+    assert(out.mergePairs.get.collect().length == 1)
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
+  test("staged amplitude: bad JSON reaches no output, a mistyped field only its readers") {
+    val dir = tmpDir("amp-edges")
+    writeLines(dir, "events.json", ampEdgeLines)
+    val out = Pipeline.transform(spark, Pipeline.AmplitudeStaged(dir))
+    // whole rows, as the sink reads them: a narrower select is a narrower
+    // scan. Events read every typed field, so the mistyped line is not an
+    // event; the root-level array gives one event per element.
+    assert(out.events.collect().map(_.getAs[String]("event")).sorted.toSeq ==
+      Seq("arr1", "arr2", "sign up"))
+    // profiles and merge pairs do not read event_properties
+    assert(out.profiles.get.collect().map(_.getAs[String]("distinct_id")).sorted.toSeq ==
+      Seq("u1", "u3"))
+    assert(out.mergePairs.get.collect()
+      .map(r => r.getAs[String]("id_a") -> r.getAs[String]("id_b")).sorted.toSeq ==
+      Seq("u1" -> "d1", "u3" -> "d3"))
+    // the validating reader keeps whole-row semantics: the mistyped line and
+    // the root-level array are corrupt there
+    val auto = Sources.jsonAuto(spark, dir, Model.amplitudeSchema)
+    assert(auto.good.select("event_type").as[String].collect().toSeq == Seq("sign up"))
+    assert(auto.corrupt.count() == 4)
+  }
+
+  test("staged reads parse with the JSON source; the corrupt-splitting readers parse each line once") {
+    val dir = tmpDir("parse-once")
+    writeLines(dir, "events.json", ampEdgeLines)
+    def parsesAndScans(df: DataFrame): (Int, Int) = {
+      val plan = df.queryExecution.optimizedPlan
+      (plan.collect { case n => n.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum }
+        .sum, plan.collectLeaves().size)
+    }
+    assert(parsesAndScans(Sources.staged(spark, dir, Model.amplitudeSchema))._1 == 0)
+    val auto = Sources.jsonAuto(spark, dir, Model.amplitudeSchema)
+    val gated = Sources.jsonFileGate(spark, dir, Model.amplitudeSchema)
+    for ((name, df) <- Seq("auto.good" -> auto.good, "auto.corrupt" -> auto.corrupt,
+        "gated.good" -> gated.good, "gated.badFiles" -> gated.badFiles)) {
+      val (parses, scans) = parsesAndScans(df)
+      assert(parses == scans, s"$name: $parses from_json over $scans scans")
+    }
   }
 }
