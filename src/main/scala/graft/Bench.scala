@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
 
@@ -14,11 +13,13 @@ import java.nio.charset.StandardCharsets
   *      map, and only the top-10 slowest per-query medians. Guaranteed well
   *      under 2,000 bytes for any query count.
   *   2. a full per-query JSON file (default `/tmp/bench_self.json`,
-  *      override with SPARK_GRAFT_BENCH_OUT) with the median, min, and every
-  *      rep for each query. The default is deliberately OUTSIDE the repo:
-  *      the driver's ambient-noisy harness runs kept overwriting the
-  *      committed clean artifact in the working tree, forcing a
-  *      noise-vs-regression adjudication every round. Promotion into the
+  *      override with SPARK_GRAFT_BENCH_OUT) with the median and every rep
+  *      for each query, and under `counters` the [[RunStats]] (jobs,
+  *      stages, tasks, input and shuffle bytes) of its last timed rep —
+  *      with SPARK_GRAFT_BENCH_REPS=1, the cold run. The default is
+  *      deliberately OUTSIDE the repo: the driver's ambient-noisy harness
+  *      runs kept overwriting the committed clean artifact in the working
+  *      tree, forcing a noise-vs-regression adjudication every round. Promotion into the
   *      repo is now a deliberate act: run `BenchCheck <prior-committed>
   *      /tmp/bench_self.json` and copy the artifact in ONLY on a PASS.
   *
@@ -37,15 +38,9 @@ import java.nio.charset.StandardCharsets
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/bench_self.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // Untimed warmup: JIT, codegen compiler, parquet reader, and the
     // shuffle/window/join/decimal-agg code paths. Without it the
     // alphabetically-first queries absorb seconds of one-time JVM cost and
@@ -98,9 +93,9 @@ object Bench {
       }
 
     def fmt(v: Double): String = f"$v%.3f"
-    final case class QRes(name: String, runs: Seq[Double], err: Option[String]) {
+    final case class QRes(name: String, runs: Seq[Double], err: Option[String],
+        stats: RunStats) {
       def median: Double = { val s = runs.sorted; s(s.size / 2) }
-      def min: Double = runs.min
     }
     // Fixture lifecycle (VERDICT r15 missing #1): rows run in sorted-name
     // order, so a family boundary (first `_`-token change) means every
@@ -120,18 +115,24 @@ object Bench {
       prevFamily = fam
       val runs = scala.collection.mutable.ArrayBuffer.empty[Double]
       var err: Option[String] = None
+      var stats: RunStats = null
       var i = 0
       while (i < reps && err.isEmpty) {
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count()
-        catch { case e: Throwable => err = Some(e.getClass.getSimpleName) }
-        runs += (System.nanoTime() - t0) / 1e9
+        // timed inside the meter, so its bus drains stay out of the seconds
+        val (sec, s) = RunStats.during(spark) {
+          val t0 = System.nanoTime()
+          try fn(spark, sfDir).count()
+          catch { case e: Throwable => err = Some(e.getClass.getSimpleName) }
+          (System.nanoTime() - t0) / 1e9
+        }
+        runs += sec
+        stats = s
         i += 1
       }
-      QRes(name, runs.toSeq, err)
+      QRes(name, runs.toSeq, err, stats)
     }
     val total = results.map(_.median).sum
-    val errs = results.collect { case QRes(k, _, Some(e)) => s"\"$k\":\"$e\"" }
+    val errs = results.collect { case QRes(k, _, Some(e), _) => s"\"$k\":\"$e\"" }
       .mkString("{", ",", "}")
 
     // Full per-query artifact — committed, compared across rounds.
@@ -140,7 +141,9 @@ object Bench {
       val qRuns = results
         .map(r => s"\"${r.name}\":[${r.runs.map(fmt).mkString(",")}]")
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"reps":$reps,"sf":"$sfDir","cpus":$cpus,"queries":$qMed,"runs":$qRuns,"errors":$errs}"""
+      val qCounters = results.map(r => s"\"${r.name}\":${r.stats.json}")
+        .mkString("{", ",", "}")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"reps":$reps,"sf":"$sfDir","cpus":${Harness.cpus},"queries":$qMed,"runs":$qRuns,"errors":$errs,"counters":$qCounters}"""
     }
     Files.write(Paths.get(outPath), full.getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,

@@ -1,52 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Example driver: run a vendor pipeline from the command line.
+/** Example driver: run a vendor pipeline from the reference's own JSON
+  * config shape (examples/configExample-*.json) via [[ConfigParser]] — a
+  * toMixpanel user's config runs as-is, with options.path pointing at
+  * staged data and a `local` destination for a file run.
   *
-  *   runMain graft.Demo <config.json>                 — reference-style
-  *   runMain graft.Demo <vendor> <inputDir> <outDir>  — quick staged run
-  *
-  * The one-arg form accepts the reference's own JSON config shape
-  * (examples/configExample-*.json) via [[ConfigParser]] — a toMixpanel
-  * user's config runs as-is (with options.path pointing at staged data).
+  *   runMain graft.Demo <config.json>
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    if (args.length == 1 && args(0).endsWith(".json")) {
-      val spark = Tables.tune(SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-        .appName("graft-demo")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate())
-      spark.sparkContext.setLogLevel("WARN")
-      val report = Pipeline.run(spark, ConfigParser.parseFile(args(0)))
-      println(s"DEMO_REPORT config=${args(0)} events=${report.events} " +
-        s"profiles=${report.profiles} merges=${report.merges}")
-      spark.stop()
-      return
-    }
-    val Array(vendor, in, out) = args.take(3)
-    val spark = Tables.tune(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
-    val source = vendor match {
-      case "amplitude" => Pipeline.AmplitudeStaged(in)
-      case "ga" => Pipeline.GaStaged(in)
-      case "csv" => Pipeline.CsvSource(in, graft.operators.CsvTransform.CsvRoles(
-        eventNameCol = sys.env.getOrElse("CSV_EVENT_COL", "action"),
-        distinctIdCol = sys.env.getOrElse("CSV_ID_COL", "guid"),
-        timeCol = sys.env.getOrElse("CSV_TIME_COL", "time"),
-        createProfiles = true))
-      case other => sys.error(s"unknown vendor: $other (want amplitude|ga|csv)")
-    }
-    val report = Pipeline.run(spark, Pipeline.Config(source, Pipeline.LocalJson(out)))
-    println(s"DEMO_REPORT vendor=$vendor events=${report.events} " +
-      s"profiles=${report.profiles} merges=${report.merges} out=$out")
+    if (args.length != 1) sys.error("usage: Demo <config.json>")
+    val config = args(0)
+    val spark = Harness.session()
+    val report = Pipeline.run(spark, ConfigParser.parseFile(config))
+    println(s"DEMO_REPORT config=$config events=${report.events} " +
+      s"profiles=${report.profiles} merges=${report.merges}")
     spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{Ann, Dedup, Sampling, SuffixArray, Vocab}
 
@@ -23,13 +22,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/sf10ish")
     val only = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     def docs = Tables.t(spark, dir, "documents")
     def emb = Tables.t(spark, dir, "embeddings")
 
@@ -87,26 +80,21 @@ object ScaleBench {
         .createTempDirectory("graft_scale_ingest_rep").toString
       spark.read.parquet(s"$d/adj").write.parquet(s"$root/adj")
       spark.read.parquet(s"$d/corp").write.parquet(s"$root/corp")
-      val jobs = new java.util.concurrent.atomic.AtomicLong()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
-      val q = graft.streaming.StreamingAnn.graphIngestToParquet(spark,
-        s"$d/$stagingName", s"$root/adj", s"$root/corp", s"$root/ckpt",
-        kLink = 12, entryIds = entries, beamWidth = 32, hops = 2,
-        expandHops = 2, maxFilesPerTrigger = mft)
-      try q.processAllAvailable() finally q.stop()
+      val (q, stats) = RunStats.during(spark) {
+        val q = graft.streaming.StreamingAnn.graphIngestToParquet(spark,
+          s"$d/$stagingName", s"$root/adj", s"$root/corp", s"$root/ckpt",
+          kLink = 12, entryIds = entries, beamWidth = 32, hops = 2,
+          expandHops = 2, maxFilesPerTrigger = mft)
+        try q.processAllAvailable() finally q.stop()
+        q
+      }
       val sec = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.removeSparkListener(listener)
+      val jobs = stats.jobs
       val batches = q.recentProgress.count(_.numInputRows > 0)
       println(f"STREAM_INGEST staging=$stagingName mft=${mft.getOrElse(0)}%d " +
-        f"drop10=$drop10 batches=$batches jobs=${jobs.get}%d sec=$sec%.1f " +
-        f"jobs_per_batch=${if (batches > 0) jobs.get.toDouble / batches else 0.0}%.1f")
+        f"drop10=$drop10 batches=$batches jobs=$jobs%d sec=$sec%.1f " +
+        f"jobs_per_batch=${if (batches > 0) jobs.toDouble / batches else 0.0}%.1f")
       spark.read.parquet(s"$root/adj").count()
     }
 
@@ -278,7 +266,7 @@ object ScaleBench {
       case (n, s, Right(r)) => s""""$n":{"sec":${f"$s%.1f"},"rows":$r}"""
       case (n, s, Left(e)) => s""""$n":{"sec":${f"$s%.1f"},"error":"${e.replace("\"", "'")}"}"""
     }.mkString("{", ",", "}")
-    println(s"""{"scalebench":"$dir","cpus":$cpus,"ops":$js}""")
+    println(s"""{"scalebench":"$dir","cpus":${Harness.cpus},"ops":$js}""")
     spark.stop()
   }
 }

@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import java.util.concurrent.atomic.AtomicLong
 
 /** Skewed-graph CC evidence harness (SCALE.md): a power-law-shaped
   * adversarial fixture — ONE giant component built from a hub of degree
@@ -27,25 +24,7 @@ object SkewCc {
   def main(args: Array[String]): Unit = {
     val spokes = args.headOption.map(_.toInt).getOrElse(1500)
     val chainLen = args.drop(1).headOption.map(_.toInt).getOrElse(1000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val sRead = new AtomicLong
-    val sWrite = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) {
-          sRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          sWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    })
+    val spark = Harness.session()
 
     // node 0 = hub; chain s occupies ids [s*chainLen+1, (s+1)*chainLen]
     val n = spokes.toLong * chainLen
@@ -56,26 +35,28 @@ object SkewCc {
       .select(col("id").as("src"), (col("id") + 1).as("dst"))
     val edges = hubEdges.unionByName(chainEdges)
 
-    var lastR = 0L
-    var lastW = 0L
+    val meter = new RunStats.Meter(spark.sparkContext)
+    var last = meter.read()
     var rounds = 0
     val t0 = System.nanoTime()
     val labels = graft.operators.IdentityResolution.connectedComponents(
       edges, maxIter = 40,
       onRound = { i =>
-        Thread.sleep(300) // drain in-flight stage events
-        val (r, w) = (sRead.get, sWrite.get)
-        println(s"""{"round":$i,"shuffle_read":${r - lastR},"shuffle_write":${w - lastW}}""")
-        lastR = r; lastW = w
+        val now = meter.read()
+        println(s"""{"round":$i,"shuffle_read":${now.shuffleReadBytes - last.shuffleReadBytes},""" +
+          s""""shuffle_write":${now.shuffleWriteBytes - last.shuffleWriteBytes}}""")
+        last = now
         rounds = i
       })
     val nComponents = labels.select("component").distinct().count()
     val wrong = labels.filter(col("component") =!= 0L).count()
     val sec = (System.nanoTime() - t0) / 1e9
+    val total = meter.read()
+    meter.close()
     println(f"""{"spokes":$spokes,"chain_len":$chainLen,"nodes":${n + 1},""" +
       s""""hub_degree":$spokes,"rounds":$rounds,"n_components":$nComponents,""" +
       f""""mislabeled":$wrong,"sec":$sec%.1f,""" +
-      s""""shuffle_read_total":${sRead.get},"shuffle_write_total":${sWrite.get}}""")
+      s""""shuffle_read_total":${total.shuffleReadBytes},"shuffle_write_total":${total.shuffleWriteBytes}}""")
     spark.stop()
   }
 }

@@ -547,7 +547,10 @@ object Ann {
       if (!isFinal) Cuts.release(cur)
       cur = next
     }
-    (rankTopK(score(cur), k), telemetry.toSeq)
+    val edges = rankTopK(score(cur), k)
+    // a `track` caller keeps only the telemetry, so nothing reads the last cut
+    if (track) Cuts.release(cur)
+    (edges, telemetry.toSeq)
   }
 
   /** Graph-walk ANN serve (the HNSW/NSW family's search shape — Malkov &

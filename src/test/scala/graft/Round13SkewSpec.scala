@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -16,20 +14,10 @@ class Round13SkewSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private val sWrite = new AtomicLong
-  spark.sparkContext.addSparkListener(new SparkListener {
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) sWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-    }
-  })
-
+  /** `body`'s result and the shuffle bytes it wrote. */
   private def measure[A](body: => A): (A, Long) = {
-    Thread.sleep(1200)
-    val w0 = sWrite.get
-    val out = body
-    Thread.sleep(1200)
-    (out, sWrite.get - w0)
+    val (out, stats) = RunStats.during(spark)(body)
+    (out, stats.shuffleWriteBytes)
   }
 
   private val boiler = "the quick brown fox jumps over a lazy dog while the " +
