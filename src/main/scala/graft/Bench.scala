@@ -16,7 +16,9 @@ import java.nio.charset.StandardCharsets
   *      override with SPARK_GRAFT_BENCH_OUT) with the median and every rep
   *      for each query, and under `counters` the [[RunStats]] (jobs,
   *      stages, tasks, input and shuffle bytes) of its last timed rep —
-  *      with SPARK_GRAFT_BENCH_REPS=1, the cold run. The default is
+  *      with SPARK_GRAFT_BENCH_REPS=1, the cold run of an oracle row (a
+  *      bench-only row's untimed warm-up, its index build, is under
+  *      `cold_counters`). The default is
   *      deliberately OUTSIDE the repo: the driver's ambient-noisy harness
   *      runs kept overwriting the committed clean artifact in the working
   *      tree, forcing a noise-vs-regression adjudication every round. Promotion into the
@@ -85,14 +87,17 @@ object Bench {
     // excluded it, but a reps=1 cold capture (the sf1 protocol) would
     // otherwise report build+serve as the serve number. One untimed call
     // per selected bench-only row warms the session caches; oracle rows
-    // keep cold-first-rep semantics.
-    selected.keys.filter(SparkEntry.benchQueries.contains).toSeq.sorted
-      .foreach { name =>
+    // keep cold-first-rep semantics. What the warm-up ran (the index build)
+    // is kept per row as its cold counters.
+    val coldStats = selected.keys.filter(SparkEntry.benchQueries.contains).toSeq.sorted
+      .map(name => name -> RunStats.during(spark) {
         try SparkEntry.benchQueries(name)(spark, sfDir).count()
-        catch { case _: Throwable => () } // the timed rep reports the error
-      }
+        catch { case _: Throwable => 0L } // the timed rep reports the error
+      }._2.json)
 
     def fmt(v: Double): String = f"$v%.3f"
+    def obj(kv: Seq[(String, String)]): String =
+      kv.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
     final case class QRes(name: String, runs: Seq[Double], err: Option[String],
         stats: RunStats) {
       def median: Double = { val s = runs.sorted; s(s.size / 2) }
@@ -132,18 +137,14 @@ object Bench {
       QRes(name, runs.toSeq, err, stats)
     }
     val total = results.map(_.median).sum
-    val errs = results.collect { case QRes(k, _, Some(e), _) => s"\"$k\":\"$e\"" }
-      .mkString("{", ",", "}")
+    val errs = obj(results.collect { case QRes(k, _, Some(e), _) => k -> s"\"$e\"" })
 
     // Full per-query artifact — committed, compared across rounds.
     val full = {
-      val qMed = results.map(r => s"\"${r.name}\":${fmt(r.median)}").mkString("{", ",", "}")
-      val qRuns = results
-        .map(r => s"\"${r.name}\":[${r.runs.map(fmt).mkString(",")}]")
-        .mkString("{", ",", "}")
-      val qCounters = results.map(r => s"\"${r.name}\":${r.stats.json}")
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"reps":$reps,"sf":"$sfDir","cpus":${Harness.cpus},"queries":$qMed,"runs":$qRuns,"errors":$errs,"counters":$qCounters}"""
+      val qMed = obj(results.map(r => r.name -> fmt(r.median)))
+      val qRuns = obj(results.map(r => r.name -> r.runs.map(fmt).mkString("[", ",", "]")))
+      val qCounters = obj(results.map(r => r.name -> r.stats.json))
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"reps":$reps,"sf":"$sfDir","cpus":${Harness.cpus},"queries":$qMed,"runs":$qRuns,"errors":$errs,"counters":$qCounters,"cold_counters":${obj(coldStats)}}"""
     }
     Files.write(Paths.get(outPath), full.getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
@@ -152,8 +153,7 @@ object Bench {
     // Short stdout summary — `queries` carries only the 10 slowest medians,
     // so the line stays far below the driver's 2,000-byte tail bound at any
     // query count (the full map lives in the `detail` file).
-    val top10 = results.sortBy(-_.median).take(10)
-      .map(r => s"\"${r.name}\":${fmt(r.median)}").mkString("{", ",", "}")
+    val top10 = obj(results.sortBy(-_.median).take(10).map(r => r.name -> fmt(r.median)))
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"reps":$reps,"errors":$errs,"queries":$top10,"detail":"$outPath","sf":"$sfDir"}""")
     spark.stop()
   }

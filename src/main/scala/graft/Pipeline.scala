@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.{Callable, ExecutionException, Executors}
 import scala.util.{Failure, Try}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, struct, to_json}
+import org.apache.spark.sql.functions.{col, count, lit}
 import graft.model.Model
 import graft.operators._
 import graft.sinks.{BatchedHttpSink, Sinks}
@@ -46,6 +46,7 @@ object Pipeline {
   final case class Outputs(events: DataFrame, profiles: Option[DataFrame],
       mergePairs: Option[DataFrame], release: () => Unit = () => ())
 
+  /** Loaded count per output; `sink` is the events write's HTTP report. */
   final case class Report(events: Long, profiles: Long, merges: Long,
       sink: Option[BatchedHttpSink.SinkReport])
 
@@ -63,21 +64,17 @@ object Pipeline {
       Outputs(GaTransform.events(spark, ga), Some(GaTransform.profiles(spark, ga)), None)
     case MixpanelStaged(path, where, eventNames, doEvents, doPeople, peoplePath) =>
       val raw = Sources.staged(spark, path, Model.mpEventSchema)
-      val filtered0 = where match {
-        case Some(w) => raw.filter(
-          graft.functions.SegmentationWhere.parse(w, org.apache.spark.sql.functions.col("properties")))
-        case None => raw
-      }
+      val filtered0 = where.fold(raw)(w =>
+        raw.filter(graft.functions.SegmentationWhere.parse(w, col("properties"))))
       val filtered =
-        if (eventNames.nonEmpty)
-          filtered0.filter(org.apache.spark.sql.functions.col("event").isin(eventNames: _*))
+        if (eventNames.nonEmpty) filtered0.filter(col("event").isin(eventNames: _*))
         else filtered0
       // doEvents=false → an empty events frame with the right schema (the
       // reference's people-only runs skip /export entirely)
       val eventsOut = if (doEvents) filtered else filtered.limit(0)
       val profiles =
         if (doPeople)
-          Some(graft.operators.MixpanelTransform.engageToProfiles(
+          Some(MixpanelTransform.engageToProfiles(
             Sources.staged(spark, peoplePath.getOrElse(s"$path-engage"),
               Model.engageSchema)))
         else None
@@ -92,10 +89,8 @@ object Pipeline {
     * back when the run returns, and AQE still coalesces. Spark's default of
     * 200 makes every map task of a small load open 200 shuffle files.
     *
-    * Every output is shaped first, so an analysis error fails the run
-    * before anything is loaded. The events, profiles and merge writes are
-    * then submitted together and reconciled once all of them have finished.
-    * This departs from the reference's events → profiles → merges order on
+    * [[load]] runs the events, profiles and merge writes together. This
+    * departs from the reference's events → profiles → merges order on
     * purpose, and is safe because no load depends on another having
     * landed: every endpoint is idempotent on its own key (`$insert_id`,
     * `$distinct_id`), profile `$set` carries `$ignore_time`, and Mixpanel
@@ -104,10 +99,6 @@ object Pipeline {
     * Each write scans the staged input itself, pruned to the columns its
     * output reads (J2), so every write starts at once; none waits for a
     * shared-scan cache to fill, and no cache holds the decoded input.
-    *
-    * Event counts are taken with `observe()` DURING the sink write — the
-    * reference's extracted = transformed = imported reconciliation
-    * (SURVEY §5) without a second scan of the data.
     */
   def run(spark: SparkSession, config: Config): Report = {
     Tables.tune(spark)
@@ -127,51 +118,45 @@ object Pipeline {
     }
   }
 
-  private def load(out: Outputs, destination: Destination): Report = destination match {
-    case LocalJson(dir) =>
-      // every count rides its write job via observe() — each output DAG
-      // executes exactly once (no count() re-run)
-      def counted(df: DataFrame, name: String): () => Long = {
-        val obs = new Observation()
-        val observed = df.observe(obs, count(lit(1)).as("n"))
-        () => { Sinks.writeLocalJson(observed, s"$dir/$name"); obs.get("n").asInstanceOf[Long] }
+  /** LOAD: each present output is observed, then shaped for the
+    * destination: NDJSON under `<dir>/{events,profiles,mergeTables}` (K9), or
+    * the vendor's route from [[Sinks.routes]]. A shaping error or an output
+    * with no route fails the run before any write starts. Each write then
+    * reconciles its output with the count it observed (SURVEY §5, no second
+    * scan): observed = loaded, over HTTP whenever none of its batches failed.
+    */
+  private def load(out: Outputs, destination: Destination): Report = {
+    val writer: (String, DataFrame) => () => Option[BatchedHttpSink.SinkReport] =
+      destination match {
+        case LocalJson(dir) =>
+          val dirs = Map("events" -> "events", "profiles" -> "profiles", "merges" -> "mergeTables")
+          (name, df) => () => { Sinks.writeLocalJson(df, s"$dir/${dirs(name)}"); None }
+        case HttpSink(vendor, opts, transport) =>
+          val routes = Sinks.routes(vendor, opts)
+          (name, df) => {
+            val route = routes.getOrElse(name,
+              throw new IllegalArgumentException(s"sink vendor $vendor takes no $name"))
+            val shaped = route.shape(df)
+            () => Some(Sinks.write(shaped, route.config, transport))
+          }
       }
-      val Seq(events, profiles, merges) = together(Seq(
-        Some(counted(out.events, "events")),
-        out.profiles.map(counted(_, "profiles")),
-        out.mergePairs.map(counted(_, "mergeTables"))))
-      Report(events.get, profiles.getOrElse(0L), merges.getOrElse(0L), None)
-    case HttpSink(vendor, opts, transport) =>
-      val cfg = Sinks.forVendor(vendor, opts)
-      val token = opts.getOrElse("token", "")
+    val outputs = Seq("events" -> Some(out.events), "profiles" -> out.profiles,
+      "merges" -> out.mergePairs)
+    val writes = outputs.map { case (name, frame) => frame.map { df =>
       val obs = new Observation()
-      val observedEvents = out.events.observe(obs, count(lit(1)).as("n_events"))
-      // K8 vendor routing: reverse sinks reshape to their own wire format
-      // (reference load/sendOther.js:7-18)
-      val events = vendor.toLowerCase match {
-        case "amplitude" =>
-          MixpanelTransform.eventsToAmplitude(observedEvents)
-            .select(to_json(struct(col("*"))).as("json"))
-        case "woopra" =>
-          MixpanelTransform.eventsToWoopra(observedEvents)
-            .select(to_json(struct(col("*"))).as("json"))
-        case _ => Sinks.shapeMixpanelEvents(observedEvents)
+      val write = writer(name, df.observe(obs, count(lit(1)).as("n")))
+      () => {
+        val sink = write()
+        val observed = obs.get("n").asInstanceOf[Long]
+        val loaded = sink.fold(observed)(_.records)
+        if (sink.forall(_.failedBatches == 0))
+          require(observed == loaded,
+            s"count reconciliation broken for $name: transformed=$observed loaded=$loaded")
+        (loaded, sink)
       }
-      def write(df: DataFrame, c: BatchedHttpSink.SinkConfig) =
-        () => Sinks.write(df, c, transport)
-      val Seq(Some(report), profiles, merges) = together(Seq(
-        Some(write(events, cfg)),
-        out.profiles.map(p => write(Sinks.shapeMixpanelProfiles(p, token),
-          Sinks.mixpanelEngageConfig(token))),
-        out.mergePairs.map(m => write(Sinks.shapeMixpanelMerges(m), cfg))))
-      // reconciliation invariant: with no failed batches, every
-      // transformed event must have been acknowledged by the sink
-      val transformed = obs.get("n_events").asInstanceOf[Long]
-      if (report.failedBatches == 0)
-        require(transformed == report.records,
-          s"count reconciliation broken: transformed=$transformed loaded=${report.records}")
-      Report(report.records, profiles.map(_.records).getOrElse(0L),
-        merges.map(_.records).getOrElse(0L), Some(report))
+    }}
+    val Seq(events, profiles, merges) = together(writes)
+    Report(events.get._1, profiles.fold(0L)(_._1), merges.fold(0L)(_._1), events.get._2)
   }
 
   /** Runs the given writes together on a driver pool and waits for every

@@ -29,7 +29,6 @@ object BatchedHttpSink {
       headers: Map[String, String] = Map.empty,
       maxRecordsPerBatch: Int = 2000,
       maxBytesPerBatch: Long = 2L * 1024 * 1024,
-      gzipBody: Boolean = true,
       maxRetries: Int = 3,
       initialBackoffMs: Long = 500,
       ratePerSecond: Double = 0.0) // 0 = unthrottled
@@ -112,9 +111,8 @@ object BatchedHttpSink {
 
     def flush(): Unit = if (buf.nonEmpty) {
       val body = buf.mkString("[", ",", "]").getBytes("UTF-8")
-      val payload = if (cfg.gzipBody) gzip(body) else body
-      val headers = cfg.headers ++
-        (if (cfg.gzipBody) Map("Content-Encoding" -> "gzip") else Map.empty) +
+      val payload = gzip(body)
+      val headers = cfg.headers + ("Content-Encoding" -> "gzip") +
         ("Content-Type" -> "application/json")
       def post(): HttpResponseLite =
         try transport.post(cfg.url, payload, headers)

@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.MixpanelTransform
 import graft.sinks.BatchedHttpSink.{SinkConfig, SinkReport, Transport}
 
 /** Vendor sink registry (SURVEY §2.10 K4-K8): each vendor is a SinkConfig
@@ -74,16 +75,40 @@ object Sinks {
   def woopraConfig(host: String): SinkConfig =
     SinkConfig(url = host, maxRecordsPerBatch = 10000, ratePerSecond = 0.5)
 
-  /** K8: vendor dispatch. */
+  private def region(opts: Map[String, String]): Region =
+    if (opts.get("region").contains("EU")) EU else US
+
+  /** K8: vendor dispatch for the events endpoint. */
   def forVendor(vendor: String, opts: Map[String, String]): SinkConfig =
     vendor.toLowerCase match {
       case "mixpanel" => mixpanelImportConfig(
-        opts.getOrElse("project_id", ""), opts.getOrElse("auth", ""),
-        if (opts.get("region").contains("EU")) EU else US)
+        opts.getOrElse("project_id", ""), opts.getOrElse("auth", ""), region(opts))
       case "amplitude" => amplitudeConfig(opts.getOrElse("api_key", ""))
       case "woopra" => woopraConfig(opts.getOrElse("host", "https://www.woopra.com/track/ce"))
       case other => throw new IllegalArgumentException(s"unknown sink vendor: $other")
     }
+
+  /** Where one output goes: its wire shape (one `json` column) and endpoint. */
+  final case class Route(shape: DataFrame => DataFrame, config: SinkConfig)
+
+  /** K8 (load/sendOther.js:7-18): a vendor's route for each output it takes.
+    * Mixpanel takes `events`, `profiles` (`/engage`, in the `/import` region)
+    * and `merges`; the reverse sinks take events only, reshaped (P13, P15).
+    */
+  def routes(vendor: String, opts: Map[String, String]): Map[String, Route] = {
+    val events = forVendor(vendor, opts)
+    def json(reshape: DataFrame => DataFrame): DataFrame => DataFrame =
+      df => reshape(df).select(to_json(struct(col("*"))).as("json"))
+    vendor.toLowerCase match {
+      case "mixpanel" =>
+        val token = opts.getOrElse("token", "")
+        Map("events" -> Route(shapeMixpanelEvents, events),
+          "profiles" -> Route(shapeMixpanelProfiles(_, token), mixpanelEngageConfig(token, region(opts))),
+          "merges" -> Route(shapeMixpanelMerges, events))
+      case "amplitude" => Map("events" -> Route(json(MixpanelTransform.eventsToAmplitude), events))
+      case _ => Map("events" -> Route(json(MixpanelTransform.eventsToWoopra), events)) // woopra
+    }
+  }
 
   /** K9: local NDJSON sink (strictly better than the reference's JSON
     * arrays — splittable, streamable).

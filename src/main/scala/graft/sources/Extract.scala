@@ -38,24 +38,22 @@ object Extract {
     * answer, never retried; after `maxAttempts` failures the last
     * exception propagates and fails the extract.
     *
-    * `retryable` decides WHICH failures are worth another attempt. The
-    * default matches transient shapes by message/type (timeouts, 5xx,
-    * connection drops); a permanent failure — 4xx auth/request errors,
-    * parse errors — propagates on the FIRST attempt instead of burning
-    * backoff sleeps on a request that can never succeed and delaying the
-    * loud failure.
+    * [[RetryingFetcher.transientDefault]] decides WHICH failures are worth
+    * another attempt: it matches transient shapes by message/type
+    * (timeouts, 5xx, connection drops); a permanent failure — 4xx
+    * auth/request errors, parse errors — propagates on the FIRST attempt
+    * instead of burning backoff sleeps on a request that can never succeed
+    * and delaying the loud failure.
     */
   final class RetryingFetcher(inner: Fetcher, maxAttempts: Int = 3,
-      backoffMs: Long = 0L,
-      retryable: Throwable => Boolean = RetryingFetcher.transientDefault)
-      extends Fetcher {
+      backoffMs: Long = 0L) extends Fetcher {
     require(maxAttempts >= 1, s"bad maxAttempts $maxAttempts")
     def get(url: String): Option[Array[Byte]] = {
       var attempt = 1
       while (attempt < maxAttempts) {
         try return inner.get(url)
         catch {
-          case scala.util.control.NonFatal(e) if retryable(e) =>
+          case scala.util.control.NonFatal(e) if RetryingFetcher.transientDefault(e) =>
             if (backoffMs > 0) Thread.sleep(backoffMs * attempt)
             attempt += 1
         }
@@ -65,7 +63,7 @@ object Extract {
   }
 
   object RetryingFetcher {
-    /** Default transience test: IO/timeout exception types are always
+    /** Transience test: IO/timeout exception types are always
       * transient; other failures count as transient only when the message
       * carries a 5xx/throttle shape (`HTTP 5xx`, 429, "timed out",
       * "connection reset"). 4xx, auth, and parse failures fall through —

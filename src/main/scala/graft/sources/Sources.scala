@@ -75,6 +75,14 @@ object Sources {
     try { new com.fasterxml.jackson.databind.ObjectMapper().readTree(s); true }
     catch { case _: Exception => false }
 
+  /** S7 read with its corrupt split, and S5's object-store scan: an object
+    * store is just another Hadoop FileSystem scheme (on a real cluster pass
+    * [[gcsConnectorConf]] as `hadoopOpts`). `hadoopOpts` are scoped PER READ:
+    * Spark merges datasource options into the scan's own Hadoop conf
+    * (newHadoopConfWithOptions), so two reads against different buckets or
+    * credentials cannot clobber each other and nothing (e.g. a keyfile)
+    * leaks into the session-global hadoopConfiguration.
+    */
   def jsonAuto(spark: SparkSession, path: String, schema: StructType,
       hadoopOpts: Map[String, String] = Map.empty): JsonRead =
     if (sniffIsWholeFileJson(spark, path, hadoopOpts))
@@ -165,23 +173,6 @@ object Sources {
   def staged(spark: SparkSession, path: String, schema: StructType): DataFrame =
     if (sniffIsWholeFileJson(spark, path)) wholeFile(spark, path, schema)
     else spark.read.schema(schema).option("mode", "DROPMALFORMED").json(path)
-
-  /** S5: object-store scan (GCS-style). The reference lists a GCS bucket
-    * and downloads session files one by one (extract/googleAnalytics.js:
-    * 23-62); Spark-native, an object store is just another Hadoop
-    * FileSystem scheme — apply the connector configuration, then run the
-    * SAME distributed read path (listing, codec chain, corrupt-record
-    * split all included). On a real cluster pass [[gcsConnectorConf]];
-    * tests register a local-backed `gs://` shim the same way.
-    */
-  def objectStore(spark: SparkSession, path: String, schema: StructType,
-      hadoopConf: Map[String, String] = Map.empty): JsonRead =
-    // Connector settings are scoped PER READ: Spark merges datasource
-    // options into the scan's own Hadoop conf (newHadoopConfWithOptions),
-    // so two reads against different buckets/credentials in one session
-    // cannot clobber each other and nothing (e.g. a service-account
-    // keyfile) leaks into the session-global hadoopConfiguration.
-    jsonAuto(spark, path, schema, hadoopConf)
 
   /** Hadoop configuration for the public GCS connector
     * (gcs-connector-hadoop3; not bundled here — zero-egress sandbox).

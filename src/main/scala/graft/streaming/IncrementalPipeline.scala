@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import graft.sinks.BatchedHttpSink
+import graft.sinks.Sinks
 import graft.sinks.BatchedHttpSink.{SinkConfig, Transport}
 
 /** Incremental (streaming) load path (SURVEY §7.2 M8) — replaces the
@@ -32,7 +32,8 @@ object IncrementalPipeline {
       .dropDuplicatesWithinWatermark("insert_id")
 
   /** Streaming → batched HTTP sink via foreachBatch: every micro-batch
-    * reuses the exact batch-path writer (idempotent per $insert_id).
+    * reuses the batch path's Mixpanel event shape and writer (idempotent
+    * per $insert_id).
     */
   def toHttpSink(events: DataFrame, cfg: SinkConfig, transport: Transport,
       checkpoint: String): StreamingQuery =
@@ -41,12 +42,7 @@ object IncrementalPipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime("5 seconds"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val shaped = batch.select(to_json(struct(
-          col("event"),
-          struct(col("distinct_id"), col("time"),
-            col("insert_id").as("$insert_id"), col("properties")).as("properties")
-        )).as("json"))
-        BatchedHttpSink.writeJson(shaped, cfg, transport)
+        Sinks.write(Sinks.shapeMixpanelEvents(batch), cfg, transport)
         ()
       }
       .start()

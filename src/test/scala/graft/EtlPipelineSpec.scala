@@ -333,6 +333,48 @@ class EtlPipelineSpec extends SparkSpec {
     }
   }
 
+  test("an EU mixpanel destination posts profiles to the EU /engage") {
+    val dir = tmpDir("amp-eu")
+    writeLines(dir, "events.json", ampLines)
+    UrlRecordingTransport.posts.clear()
+    val report = Pipeline.run(spark, Pipeline.Config(Pipeline.AmplitudeStaged(dir),
+      mixpanelSink.copy(opts = mixpanelSink.opts + ("region" -> "EU"))))
+    assert(report.profiles == 2)
+    val urls = UrlRecordingTransport.posts.asScala.map(_._1).toSeq
+    assert(urls.exists(_.startsWith("https://api-eu.mixpanel.com/engage")), urls)
+    assert(urls.forall(_.startsWith("https://api-eu.mixpanel.com/")), urls)
+  }
+
+  test("an output the vendor has no route for fails the run before any POST") {
+    val dir = tmpDir("mp-people-to-amp")
+    writeLines(dir, "export.json", Seq(
+      """{"event":"click","distinct_id":"u1","time":1700000000,"insert_id":"a","source":"mp","properties":{}}"""))
+    val peopleDir = tmpDir("mp-people-to-amp-engage")
+    writeLines(peopleDir, "engage.json", Seq("""{"$distinct_id":"u1","$properties":{"plan":"pro"}}"""))
+    UrlRecordingTransport.posts.clear()
+    val e = intercept[IllegalArgumentException] {
+      Pipeline.run(spark, Pipeline.Config(
+        Pipeline.MixpanelStaged(dir, doPeople = true, peoplePath = Some(peopleDir)),
+        Pipeline.HttpSink("amplitude", Map("api_key" -> "k"), new UrlRecordingTransport)))
+    }
+    assert(e.getMessage.contains("amplitude") && e.getMessage.contains("profiles"), e.getMessage)
+    assert(UrlRecordingTransport.posts.isEmpty)
+  }
+
+  test("amplitude into local NDJSON reports the rows written for every output") {
+    val dir = tmpDir("amp-local")
+    writeLines(dir, "events.json", ampLines)
+    val outDir = tmpDir("amp-local-out")
+    val report = Pipeline.run(spark,
+      Pipeline.Config(Pipeline.AmplitudeStaged(dir), Pipeline.LocalJson(outDir)))
+    def written(name: String): Long = spark.read.json(s"$outDir/$name").collect().length
+    assert(report.events == written("events"))
+    assert(report.profiles == written("profiles"))
+    assert(report.merges == written("mergeTables"))
+    assert((report.events, report.profiles, report.merges) == (3L, 2L, 1L))
+    assert(report.sink.isEmpty)
+  }
+
   test("blank and whitespace-only NDJSON lines yield no row in either reader") {
     val dir = tmpDir("blank-lines")
     writeLines(dir, "export.json", Seq(

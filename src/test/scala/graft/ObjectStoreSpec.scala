@@ -35,7 +35,7 @@ class ObjectStoreSpec extends SparkSpec {
   test("gs:// path reads through the same distributed scan (S5 config surface)") {
     stage("my-bucket", "export/part-0.json", (0 until 4).map(mpLine))
     stage("my-bucket", "export/part-1.json.gz", (4 until 7).map(mpLine), gzip = true)
-    val read = Sources.objectStore(spark, "gs://my-bucket/export",
+    val read = Sources.jsonAuto(spark, "gs://my-bucket/export",
       Model.mpEventSchema, conf)
     // 4 plain + 3 gzipped rows: listing, codec chain and parse all ran
     // against the foreign scheme

@@ -72,9 +72,11 @@ class SinkSpec extends SparkSpec {
       .select(to_json(struct(col("i"), lit(big).as("pad"))).as("json"))
       .coalesce(1)
     val cfg = SinkConfig(url = "http://test/import", maxRecordsPerBatch = 1000,
-      maxBytesPerBatch = 10000, maxRetries = 0, gzipBody = false)
+      maxBytesPerBatch = 10000, maxRetries = 0)
     BatchedHttpSink.writeJson(df, cfg, new RecordingTransport)
+    // the cap counts raw bytes, so measure each body unzipped
     val bodies = RecordingTransport.bodies.toArray(Array.empty[Array[Byte]])
+      .map(gunzip(_).getBytes("UTF-8"))
     assert(bodies.length > 1)
     bodies.foreach(b => assert(b.length <= 10100, s"body ${b.length} exceeds cap"))
   }

@@ -39,6 +39,8 @@ class StreamingSpec extends SparkSpec {
       }.mkString
     val ids = "\"\\$insert_id\":\"(i\\d)\"".r.findAllMatchIn(sent).map(_.group(1)).toSeq
     assert(ids.sorted == Seq("i1", "i2", "i3"), s"got $ids")
+    // the batch path's event shape, `$source` included
+    assert("\"\\$source\":\"s\"".r.findAllIn(sent).size == ids.size, sent)
   }
 
   test("watermarked tumbling-window aggregation over the file stream") {
