@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -9,9 +9,9 @@ import org.apache.spark.sql.expressions.Window
   * [[GaTransform.explodeSession]], the SQL Generator in
   * [[graft.plans.ExplodeSession]]).
   *
-  * One shuffle on the user key; both the lag-gap flagging and the running
-  * session counter reuse the same window partitioning, so Catalyst plans a
-  * single sort+window stage.
+  * One window pass: one hash exchange on the user key and one sort by
+  * (time, tie), over which `lag`, `lead` and the running session counter
+  * all run. [[explode]] adds one generator on top of that pass.
   */
 object Sessionize {
 
@@ -20,37 +20,51 @@ object Sessionize {
     * `tieCol` breaks equal-time ordering deterministically.
     */
   def sessionize(events: DataFrame, userCol: String, timeCol: String,
+      tieCol: String, gapSeconds: Long): DataFrame =
+    flagged(events, userCol, timeCol, tieCol, gapSeconds)
+      .drop("__is_new", "__closes")
+
+  /** [[sessionize]] plus `__is_new` (the row opens its session) and
+    * `__closes` (it closes one: no next row, a null time, or a gap over
+    * `gapSeconds` to the next row, i.e. the next row opens a session).
+    * Times sort nulls first, so each null-time row is a session of its own.
+    */
+  private def flagged(events: DataFrame, userCol: String, timeCol: String,
       tieCol: String, gapSeconds: Long): DataFrame = {
     val wOrd = Window.partitionBy(userCol).orderBy(timeCol, tieCol)
+    val t = col(timeCol)
     events
       .withColumn("__prev_t", lag(timeCol, 1).over(wOrd))
+      .withColumn("__next_t", lead(timeCol, 1).over(wOrd))
       .withColumn("__is_new",
-        when(col("__prev_t").isNull || col(timeCol) - col("__prev_t") > gapSeconds, 1L)
+        when(col("__prev_t").isNull || t - col("__prev_t") > gapSeconds, 1L)
           .otherwise(0L))
+      .withColumn("__closes",
+        col("__next_t").isNull || t.isNull || col("__next_t") - t > gapSeconds)
       .withColumn("session_seq",
         sum("__is_new").over(wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .drop("__prev_t", "__is_new")
+      .drop("__prev_t", "__next_t")
   }
 
   /** Full session explosion: per (user, session) emit one
     * "session begins" row at the first event time, every original event,
     * and one "session ends" row at last event time + 1 s — the relational
     * rendering of the reference's signature operator
-    * (gaToMixpanel.js:129-301).
+    * (gaToMixpanel.js:129-301). Each input row yields its hit row, plus a
+    * begin row if it opens its session and an end row if it closes it,
+    * from one generator over the sessionize window pass; a null-time row
+    * is a one-row session with null begin and end times.
     * Output: (userCol, session_seq, event, time_s).
     */
   def explode(events: DataFrame, userCol: String, timeCol: String,
       tieCol: String, eventCol: String, gapSeconds: Long): DataFrame = {
-    val sessions = sessionize(events, userCol, timeCol, tieCol, gapSeconds)
-    val hits = sessions.select(
+    val t = col(timeCol)
+    def row(event: Column, time: Column) = struct(event.as("event"), time.as("time_s"))
+    flagged(events, userCol, timeCol, tieCol, gapSeconds).select(
       col(userCol), col("session_seq"),
-      col(eventCol).as("event"), col(timeCol).as("time_s"))
-    val bounds = sessions.groupBy(userCol, "session_seq")
-      .agg(min(timeCol).as("t0"), max(timeCol).as("t1"))
-    val begins = bounds.select(col(userCol), col("session_seq"),
-      lit("session begins").as("event"), col("t0").as("time_s"))
-    val ends = bounds.select(col(userCol), col("session_seq"),
-      lit("session ends").as("event"), (col("t1") + 1).as("time_s"))
-    hits.unionByName(begins).unionByName(ends)
+      inline(filter(array(
+        when(col("__is_new") === 1L, row(lit("session begins"), t)),
+        row(col(eventCol), t),
+        when(col("__closes"), row(lit("session ends"), t + 1))), _.isNotNull)))
   }
 }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.ListenerDrain
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
@@ -290,8 +291,11 @@ class EtlPipelineSpec extends SparkSpec {
         plans.add(qe.executedPlan)
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
-    // planned reducer counts of the shuffles in the run's three writes
+    // planned reducer counts of the shuffles in the run's three writes;
+    // draining first keeps query-end events still queued from earlier
+    // work out of the plan set
     def shufflePartitions(): Set[Int] = {
+      ListenerDrain(spark.sparkContext)
       plans.clear()
       Pipeline.run(spark, Pipeline.Config(Pipeline.AmplitudeStaged(dir), mixpanelSink))
       eventually(timeout(Span(10, Seconds)))(assert(plans.size >= 3))
@@ -299,6 +303,7 @@ class EtlPipelineSpec extends SparkSpec {
         case e: ShuffleExchangeLike => e.numPartitions
       }.toSet
     }
+    ListenerDrain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       spark.conf.unset(key)
